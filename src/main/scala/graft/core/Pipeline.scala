@@ -38,24 +38,6 @@ object Pipeline {
       }
     }
 
-  /** A11 — same fold over dry_run(schema) (pipeline.py:61-94). */
-  def executeDryRunChain(
-      initial: Either[Throwable, StructType],
-      transforms: Seq[TransformPlugin],
-      schemaMap: LabeledSchemaMap = Map.empty): Either[Throwable, StructType] =
-    transforms.zipWithIndex.foldLeft(initial) { case (acc, (p, i)) =>
-      acc.flatMap { schema =>
-        log.info(s"[${i + 1}/${transforms.size}] Dry-running transform: ${p.name}")
-        val out = p match {
-          case m: MultiStreamTransformPlugin => m.dryRunWith(schema, schemaMap)
-          case _ => p.dryRun(schema)
-        }
-        out.foreach(s =>
-          log.debug(s"${p.name}: ${schema.size} columns in, ${s.size} columns out"))
-        out
-      }
-    }
-
   /** A12 — output fan-out: every sink receives the SAME transformed
     * frame; stop on first failure (pipeline.py:120-140). Each sink is
     * its own Spark action; with `persistMultiOutput` (the DEFAULT
@@ -90,37 +72,25 @@ object Pipeline {
     result
   }
 
-  /** A13 — dry-run fan-out: every output validates the ORIGINAL
-    * schema (`result = schema.bind(plugin.dry_run)` each iteration —
-    * pipeline.py:97-117), so one sink's returned schema never leaks
-    * into the next sink's validation; the LAST sink's result is
-    * returned, and the fold stops at the first failure. */
-  def executeOutputDryRun(schema: Either[Throwable, StructType],
-                          outputs: Seq[OutputPlugin]): Either[Throwable, StructType] =
-    outputs.zipWithIndex.foldLeft(schema) { case (acc, (p, i)) =>
-      acc.flatMap { _ =>
-        log.info(s"[${i + 1}/${outputs.size}] Dry-running output: ${p.name}")
-        schema.flatMap(p.dryRun)
-      }
-    }
-
-  /** A14 — labeled transform routing (pipeline.py:143-162): each
-    * transform applies to the stream matching its label; a missing
-    * label STORES a Left under that label (the pipeline continues —
-    * note the asymmetry with output routing, which short-circuits).
+  /** A14 — labeled transform routing (pipeline.py:143-162), the ONE
+    * fold behind both `run` (streams of DataFrames) and `check`
+    * (streams of schemas): each transform applies to the stream
+    * matching its label and sees every other stream as it stands at
+    * that point; a missing label STORES a Left under that label (the
+    * pipeline continues — note the asymmetry with output routing,
+    * which short-circuits).
     */
-  def executeLabeledTransformChain(
-      dataMap: LabeledDataMap,
-      transforms: Seq[TransformPlugin]): LabeledDataMap =
-    transforms.foldLeft(dataMap) { (acc, p) =>
+  private def routeTransforms[V](
+      streams: Map[String, Either[Throwable, V]],
+      transforms: Seq[TransformPlugin], verb: String)(
+      step: (TransformPlugin, V, Map[String, Either[Throwable, V]]) => Either[Throwable, V])
+      : Map[String, Either[Throwable, V]] =
+    transforms.foldLeft(streams) { (acc, p) =>
       acc.get(p.label) match {
         case Some(entry) =>
-          acc.updated(p.label, entry.flatMap { df =>
-            log.info(s"Executing transform: ${p.name} (label: ${p.label})")
-            p match {
-              case m: MultiStreamTransformPlugin => m.executeWith(df, acc)
-              case _ => p.execute(df)
-            }
+          acc.updated(p.label, entry.flatMap { v =>
+            log.info(s"$verb transform: ${p.name} (label: ${p.label})")
+            step(p, v, acc)
           })
         case None =>
           acc.updated(p.label, Left(new NoSuchElementException(
@@ -128,8 +98,47 @@ object Pipeline {
       }
     }
 
-  /** A15 — labeled output routing (pipeline.py:165-186): missing label
-    * ⇒ IMMEDIATE failure return (short-circuit, unlike A14).
+  def executeLabeledTransformChain(
+      dataMap: LabeledDataMap,
+      transforms: Seq[TransformPlugin]): LabeledDataMap =
+    routeTransforms(dataMap, transforms, "Executing") {
+      case (m: MultiStreamTransformPlugin, df, streams) => m.executeWith(df, streams)
+      case (p, df, _) => p.execute(df)
+    }
+
+  /** A11 — `check`'s transform chain: the A14 fold over
+    * dry_run(schema) (pipeline.py:61-94), routed by label exactly as
+    * `run` routes frames. */
+  def dryRunLabeledTransformChain(
+      schemaMap: LabeledSchemaMap,
+      transforms: Seq[TransformPlugin]): LabeledSchemaMap =
+    routeTransforms(schemaMap, transforms, "Dry-running") {
+      case (m: MultiStreamTransformPlugin, s, schemas) => m.dryRunWith(s, schemas)
+      case (p, s, _) => p.dryRun(s)
+    }
+
+  /** A15 — labeled output routing (pipeline.py:165-186), shared by
+    * `run` and `check`: a missing label ⇒ IMMEDIATE failure return
+    * (short-circuit, unlike A14); otherwise each sink gets its label's
+    * stream and the fold stops at the first failure. */
+  private def routeOutputs[V, R](
+      streams: Map[String, Either[Throwable, V]],
+      outputs: Seq[OutputPlugin], verb: String, zero: R)(
+      sink: (OutputPlugin, V) => Either[Throwable, R]): Either[Throwable, R] =
+    outputs.foldLeft[Either[Throwable, R]](Right(zero)) { (acc, p) =>
+      acc.flatMap { _ =>
+        streams.get(p.label) match {
+          case Some(entry) =>
+            log.info(s"$verb output: ${p.name} (label: ${p.label})")
+            entry.flatMap(sink(p, _))
+          case None =>
+            Left(new NoSuchElementException(
+              s"No data with label '${p.label}' for output plugin '${p.name}'"))
+        }
+      }
+    }
+
+  /** A15 for `run`.
     *
     * `persistMultiOutput` (DEFAULT since round 10) caches each stream
     * that MORE THAN ONE sink consumes, for the duration of the
@@ -156,23 +165,23 @@ object Pipeline {
         e.map(df => if (df.isStreaming) df else df.persist())
       else e)
     }
-    val result = outputs.foldLeft[Either[Throwable, Unit]](Right(())) { (acc, p) =>
-      acc.flatMap { _ =>
-        effective.get(p.label) match {
-          case Some(entry) =>
-            log.info(s"Executing output: ${p.name} (label: ${p.label})")
-            entry.flatMap(p.execute)
-          case None =>
-            Left(new NoSuchElementException(
-              s"No data with label '${p.label}' for output plugin '${p.name}'"))
-        }
-      }
-    }
+    val result = routeOutputs(effective, outputs, "Executing", ())(
+      (p, df) => p.execute(df))
     effective.foreach { case (l, e) =>
       if (multi(l)) e.foreach(df => Errors.safe(df.unpersist()))
     }
     result
   }
+
+  /** A13 — A15 for `check`: every sink validates its label's schema
+    * as the transforms left it (`result = schema.bind(plugin.dry_run)`
+    * each iteration — pipeline.py:97-117), so one sink's returned
+    * schema never leaks into the next sink's validation; the LAST
+    * sink's result is returned. */
+  def dryRunLabeledOutput(schemaMap: LabeledSchemaMap,
+                          outputs: Seq[OutputPlugin]): Either[Throwable, StructType] =
+    routeOutputs(schemaMap, outputs, "Dry-running", StructType(Nil))(
+      (p, s) => p.dryRun(s))
 
   /** A16 — full pipeline (pipeline.py:188-212): inputs build the
     * labeled map (later inputs with the same label overwrite earlier,
@@ -193,9 +202,12 @@ object Pipeline {
   }
 
   /** A17 — full dry-run pipeline (pipeline.py:215-238): build the
-    * label→schema map, then — reference quirk, kept for parity
-    * (docs/spec.md:416-418) — only the 'default' label flows through
-    * transform + output validation.
+    * label→schema map from the inputs' dry runs, then route it through
+    * the same label folds as [[runPipeline]]. This diverges from the
+    * reference, which validates only the 'default' label
+    * (docs/spec.md:416-418): here every label is checked, so a
+    * label-routed transform never meets another label's schema.
+    * Returns the last sink's validated schema.
     */
   def runDryRunPipeline(inputs: Seq[InputPlugin],
                         transforms: Seq[TransformPlugin],
@@ -205,9 +217,6 @@ object Pipeline {
       log.info(s"Dry-running input: ${p.name} (label: ${p.label})")
       p.label -> p.dryRun()
     }.toMap
-    val initial = schemaMap.getOrElse("default",
-      Left(new NoSuchElementException("No input data with label 'default'")))
-    val transformed = executeDryRunChain(initial, transforms, schemaMap)
-    executeOutputDryRun(transformed, outputs)
+    dryRunLabeledOutput(dryRunLabeledTransformChain(schemaMap, transforms), outputs)
   }
 }

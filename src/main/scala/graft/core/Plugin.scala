@@ -59,15 +59,18 @@ trait BasePlugin {
 /** Produces the initial DataFrame of a labeled stream (plugin.py:53-65). */
 trait InputPlugin extends BasePlugin {
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame]
-  /** Schema without reading data (Parquet footer / CSV sniff) —
-    * plugin.py:60-65; must trigger no Spark job. */
+  /** Schema without reading row data (Parquet footer / CSV sniff) —
+    * plugin.py:60-65. May still submit Spark jobs: Spark's parquet
+    * schema inference runs one footer-reading job per input. */
   def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType]
 }
 
 /** Pure plan-to-plan function (plugin.py:68-77). */
 trait TransformPlugin extends BasePlugin {
   def execute(df: DataFrame): Either[Throwable, DataFrame]
-  /** Symbolic schema propagation for `check` (plugin.py:73-77). */
+  /** Symbolic schema propagation for `check` (plugin.py:73-77). The
+    * built-ins inherit it from `BaseTransformPlugin`: `execute`
+    * analysed over a zero-row frame of `schema`. */
   def dryRun(schema: StructType): Either[Throwable, StructType]
 }
 
@@ -90,7 +93,7 @@ trait MultiStreamTransformPlugin extends TransformPlugin {
   /** Single-stream fallbacks delegate with an empty map. */
   final def execute(df: DataFrame): Either[Throwable, DataFrame] =
     executeWith(df, Map.empty)
-  final def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override final def dryRun(schema: StructType): Either[Throwable, StructType] =
     dryRunWith(schema, Map.empty)
 }
 

@@ -314,13 +314,17 @@ object Dedup {
     * warning. */
   private def alternatingComponents(nodes: DataFrame, idCol: String,
                                     pairs: DataFrame, maxIter: Int): DataFrame = {
-    var e = pairs
+    val edges = pairs
       .select(greatest(col("id_a"), col("id_b")).as("_hi"),
         least(col("id_a"), col("id_b")).as("_lo"))
       .filter(col("_hi") =!= col("_lo"))
       .distinct()
-      .localCheckpoint(eager = false) // the count materializes it
-    var eCnt = e.count()
+    // an edge set the optimizer already proves empty (a zero-row
+    // input, as in `check`) is the fixed point: no job to run
+    val none = Similarity.provenMaxRows(edges).contains(0L)
+    var e = if (none) edges
+      else edges.localCheckpoint(eager = false) // the count materializes it
+    var eCnt = if (none) 0L else e.count()
     var converged = eCnt == 0L
     var round = 0
     while (!converged && round < maxIter) {
@@ -690,6 +694,8 @@ object Dedup {
     // expensive transform chain (the self-join below re-executes it
     // twice more anyway when uncached).
     blockCol match {
+      case _ if Similarity.provenMaxRows(df).exists(_ <= maxBlock) =>
+        () // no block outgrows a frame the optimizer bounds
       case None =>
         Similarity.requireBounded(df, maxBlock,
           "ngramJaccardPairs(blockCol=None) is all-pairs and")
@@ -1211,11 +1217,15 @@ object Dedup {
           Sampling.keyHash(col(idCol)) % lit(nClusters.toLong))
       case "kmeans" =>
         val sample = Similarity.trainingSample(norm, idCol, "v")
-        val centroids = KMeansLite.fit(sample, nClusters, iters = 25,
-          seed = 42L)
-        import graft.expressions.NearestCentroids.nearest_centroids
-        norm.withColumn("_cl",
-          explode(nearest_centroids(col("v"), centroids, nAssign)))
+        // an empty sample means no rows: there is nothing to cluster
+        if (sample.isEmpty) norm.withColumn("_cl", lit(0))
+        else {
+          val centroids = KMeansLite.fit(sample, nClusters, iters = 25,
+            seed = 42L)
+          import graft.expressions.NearestCentroids.nearest_centroids
+          norm.withColumn("_cl",
+            explode(nearest_centroids(col("v"), centroids, nAssign)))
+        }
       case other => throw new IllegalArgumentException(
         s"assign must be kmeans or hash, got: $other")
     }

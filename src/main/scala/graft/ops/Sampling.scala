@@ -146,6 +146,9 @@ object Sampling {
     * input across both (the returned frame reads the cache; the
     * caller owns the eventual `df.unpersist()` once the sink has
     * run), or persist/checkpoint upstream yourself.
+    *
+    * Input with no rows comes back as is (there is no mixture to
+    * match); input with rows but no weighted source fails.
     */
   def mixToWeights(df: DataFrame, groupCol: String, keyCol: String,
                    weights: Map[String, Double],
@@ -153,10 +156,23 @@ object Sampling {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be positive")
     val src = if (persistInput) df.persist() else df
-    val counts = src.filter(col(groupCol).isin(weights.keys.toSeq: _*))
-      .groupBy(groupCol).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    mixFilter(src, groupCol, keyCol, weights, counts)
+    weightedTotals(src, groupCol, weights, count(lit(1)))
+      .fold(src)(mixFilter(src, groupCol, keyCol, weights, _))
+  }
+
+  /** Per-source totals of `measure` over the weighted sources, in one
+    * job: unweighted rows count as one extra null-keyed group, so an
+    * input without rows (None: no group at all) is told apart from
+    * one without weighted rows (an empty map). */
+  private def weightedTotals(src: DataFrame, groupCol: String,
+                             weights: Map[String, Double],
+                             measure: Column): Option[Map[String, Long]] = {
+    val weighted = col(groupCol).isin(weights.keys.toSeq: _*)
+    val groups = src.groupBy(when(weighted, col(groupCol)).as(groupCol))
+      .agg(measure).collect()
+    if (groups.isEmpty) None
+    else Some(groups.filterNot(_.isNullAt(0))
+      .map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
   /** Domain mixing by a per-row BUDGET column instead of row count:
@@ -175,18 +191,15 @@ object Sampling {
     *
     * Scale shape: identical to [[mixToWeights]] — one sum
     * aggregation collected O(#sources), one broadcast-sized CASE
-    * filter, no extra shuffle. */
+    * filter, no extra shuffle. Input with no rows comes back as is. */
   def mixToBudgetWeights(df: DataFrame, groupCol: String, keyCol: String,
                          budgetCol: String, weights: Map[String, Double],
                          persistInput: Boolean = false): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be positive")
     val src = if (persistInput) df.persist() else df
-    val masses = src.filter(col(groupCol).isin(weights.keys.toSeq: _*))
-      .groupBy(groupCol)
-      .agg(sum(col(budgetCol).cast("long")).as("_m"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    mixFilter(src, groupCol, keyCol, weights, masses)
+    weightedTotals(src, groupCol, weights, sum(col(budgetCol).cast("long")))
+      .fold(src)(mixFilter(src, groupCol, keyCol, weights, _))
   }
 
   /** Shared mixing tail: derive per-source keep bands from exact
@@ -233,7 +246,8 @@ object Sampling {
     * implementations — band edges can move by 1 part in 2^32.
     *
     * Scale shape: one aggregation collected O(#sources), one
-    * broadcast-sized CASE filter — same as [[mixToWeights]]. */
+    * broadcast-sized CASE filter — same as [[mixToWeights]]. Input
+    * with no rows comes back as is. */
   def mixByTemperature(df: DataFrame, groupCol: String, keyCol: String,
                        temperature: Double,
                        budgetCol: Option[String] = None,
@@ -260,12 +274,14 @@ object Sampling {
     val totals: Map[String, Long] =
       grouped.map(row => row.getString(0) -> row.getLong(1)).toMap
     val present = totals.filter(_._2 > 0)
-    require(present.nonEmpty, "no non-empty source present in the data")
+    require(grouped.isEmpty || present.nonEmpty,
+      "no non-empty source present in the data")
     val weights = present.map { case (s, n) =>
       s -> (if (temperature == 2.0) math.sqrt(n.toDouble)
             else math.pow(n.toDouble, 1.0 / temperature))
     }
-    mixFilter(src, groupCol, keyCol, weights, present)
+    if (grouped.isEmpty) src
+    else mixFilter(src, groupCol, keyCol, weights, present)
   }
 
   /** Weighted sampling without replacement, Efraimidis–Spirakis

@@ -78,16 +78,23 @@ object Similarity {
     * redirect to the bucketed methods instead of letting a 100 GB
     * table reach a collect/broadcast. */
   private[graft] def requireBounded(df: DataFrame, maxRows: Int,
-                                    what: String): Unit = {
-    // long addition: maxRows = Int.MaxValue (the advertised "raise
-    // the cap" escape hatch) must not wrap into a negative limit
-    val probe = math.min(maxRows.toLong + 1, Int.MaxValue.toLong).toInt
-    val n = df.limit(probe).count()
-    require(n <= maxRows,
-      s"$what materializes its input driver/broadcast-side and found " +
-        s"> $maxRows rows; use the bucketed methods (lsh/ivf) for " +
-        "large inputs, or raise the cap explicitly if the size is intended")
-  }
+                                    what: String): Unit =
+    if (!provenMaxRows(df).exists(_ <= maxRows)) {
+      // long addition: maxRows = Int.MaxValue (the advertised "raise
+      // the cap" escape hatch) must not wrap into a negative limit
+      val probe = math.min(maxRows.toLong + 1, Int.MaxValue.toLong).toInt
+      val n = df.limit(probe).count()
+      require(n <= maxRows,
+        s"$what materializes its input driver/broadcast-side and found " +
+          s"> $maxRows rows; use the bucketed methods (lsh/ivf) for " +
+          "large inputs, or raise the cap explicitly if the size is intended")
+    }
+
+  /** The row bound the optimizer proves for `df` (a zero-row input,
+    * as in `check`, proves 0), if any: a size probe it already
+    * answers needs no Spark job. */
+  private[graft] def provenMaxRows(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan.maxRows
 
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, embCol: String, k: Int,

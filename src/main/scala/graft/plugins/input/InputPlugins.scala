@@ -44,7 +44,8 @@ class ParquetScanPlugin(options: Map[String, Any], configDir: Path, label: Strin
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(spark.read.parquet(p.toString)))
 
-  /** Footer-only schema read; no Spark job touches row data. */
+  /** Footer-only schema read: no row is read, but Spark's parquet
+    * schema inference submits one footer-reading job. */
   def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
     inputPath().flatMap(p => Errors.safe(spark.read.parquet(p.toString).schema))
 }

@@ -172,11 +172,6 @@ class DedupPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   private def numOpt(key: String, default: Double): Double =
     options.get(key).map(_.toString.toDouble).getOrElse(default)
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("method").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven deterministic sampling ([[graft.ops.Sampling]]):
@@ -335,11 +330,6 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
           s"Unknown sample method: '$other'"))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("method").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven PII redaction ([[graft.ops.Text.redactPii]]):
@@ -361,14 +351,6 @@ class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       else redacted
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-  }
 }
 
 /** Config-driven benchmark-contamination check
@@ -405,27 +387,6 @@ class ContaminationPlugin(options: Map[String, Any], configDir: Path, label: Str
           case other => throw new PluginExecutionError(
             s"Unknown contamination mode: '$other'")
         }
-      }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      bl <- requiredString("bench_label")
-      _ <- schemas.getOrElse(bl, Left(new NoSuchElementException(
-        s"No input data with label '$bl' for contamination plugin")))
-      idCol <- requiredString("id_column")
-      out <- graft.core.Errors.safe {
-        val idField = schema.fields.find(_.name == idCol).getOrElse(
-          throw new graft.core.SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        if (options.getOrElse("mode", "flag").toString == "remove")
-          schema // anti-join keeps the corpus schema unchanged
-        else
-          StructType(Seq(idField,
-            StructField("n_overlap", LongType, nullable = false),
-            StructField("n_bench_docs", LongType, nullable = false)))
       }
     } yield out
 }
@@ -534,40 +495,6 @@ class DsirPlugin(options: Map[String, Any], configDir: Path, label: String)
             roundTo = roundTo)
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      spec <- targetSpec()
-      tss <- spec.foldRight(
-          Right(Nil): Either[Throwable, List[StructType]]) {
-        case ((tl, _), acc) =>
-          for {
-            ts <- schemas.getOrElse(tl, Left(new NoSuchElementException(
-              s"No input data with label '$tl' for dsir plugin")))
-            rest <- acc
-          } yield ts :: rest
-      }
-      _ <- required("k")
-      out <- graft.core.Errors.safe {
-        val idCol = options.getOrElse("id_column", "doc_id").toString
-        val tc = options.getOrElse("text_column", "text").toString
-        val ttc = options.getOrElse("target_text_column", tc).toString
-        for (n <- Seq(idCol, tc))
-          if (!schema.fields.exists(_.name == n))
-            throw new graft.core.SchemaValidationError(
-              s"Column '$n' not found in schema")
-        for ((ts, (tl, _)) <- tss.zip(spec))
-          if (!ts.fields.exists(_.name == ttc))
-            throw new graft.core.SchemaValidationError(
-              s"Column '$ttc' not found in target schema" +
-                (if (spec.size > 1) s" (label '$tl')" else ""))
-        StructType(schema.fields ++ Seq(
-          StructField("dsir_logw", DoubleType, nullable = true),
-          StructField("dsir_key", DoubleType, nullable = true)))
-      }
-    } yield out
 }
 
 /** Config-driven batch sessionization ([[graft.ops.Sessionize]]):
@@ -588,11 +515,6 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
 
   private def method: String =
     options.get("method").map(_.toString).getOrElse("islands")
-
-  private def requiredCols: Seq[String] =
-    if (method == "session_window")
-      Seq("user_column", "ts_column", "value_column")
-    else Seq("user_column", "ts_column", "tie_column", "value_column")
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
@@ -622,26 +544,6 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      user <- requiredString("user_column")
-      _ <- requiredString("ts_column")
-      _ <- requiredString("value_column")
-      out <- requiredCols
-        .map(options.get(_).map(_.toString))
-        .collect { case Some(c) => c }
-        .find(c => !schema.fieldNames.contains(c))
-        .map(c => Left(new graft.core.SchemaValidationError(
-          s"Column '$c' not found in schema")))
-        .getOrElse {
-          if (method == "islands" && !options.contains("tie_column"))
-            Left(new graft.core.SchemaValidationError(
-              "Option 'tie_column' is required for method 'islands'"))
-          else propagateSchema(schema)(df =>
-            execute(df).fold(e => throw e, identity))
-        }
-    } yield out
 }
 
 /** Config-driven sliding-window chunking ([[graft.ops.Chunking]]):
@@ -664,11 +566,6 @@ class ChunkPlugin(options: Map[String, Any], configDir: Path, label: String)
           minTokens = options.get("min_tokens").map(_.toString.toInt).getOrElse(1))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven sequence packing ([[graft.ops.Packing]]): assign
@@ -701,15 +598,6 @@ class PackPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      _ <- requiredString("tokens_column")
-      _ <- stringList("shard_columns")
-      _ <- requiredString("order_column")
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
-    } yield out
 }
 
 /** Config-driven blocklist gate ([[graft.ops.Text]], UT1-style):
@@ -734,11 +622,6 @@ class BlocklistPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("words").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven pivot (long → wide): group_by (req, list),
@@ -766,11 +649,6 @@ class PivotPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("pivot_column").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven unpivot/melt (wide → long): id_columns (req, list),
@@ -791,14 +669,6 @@ class UnpivotPlugin(options: Map[String, Any], configDir: Path, label: String)
           options.getOrElse("variable_column", "measure").toString,
           options.getOrElse("value_column", "value").toString)
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      _ <- stringList("id_columns")
-      _ <- stringList("value_columns")
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
     } yield out
 }
 
@@ -822,17 +692,6 @@ class VocabEncodePlugin(options: Map[String, Any], configDir: Path, label: Strin
         oovId = options.get("oov_id").map(_.toString.toLong).getOrElse(-1L),
         outCol = options.getOrElse("output_column", "token_ids").toString)
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df =>
-      // schema-only: an empty vocab keeps the dry run actionless
-      graft.ops.Vocab.encode(df, tc, Seq.empty,
-        outCol = options.getOrElse("output_column", "token_ids").toString))
-  }
 }
 
 /** Config-driven BPE tokenization ([[graft.ops.Bpe]]) — the
@@ -902,27 +761,6 @@ class BpePlugin(options: Map[String, Any], configDir: Path, label: String)
           s"Unknown bpe method: '$other' (expected count | encode)"))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else options.getOrElse("method", "count").toString match {
-      // same whitelist as execute: a config typo must fail the dry
-      // run, not surface only at run time
-      case "encode" => propagateSchema(schema)(df =>
-        // schema-only: an empty merge table keeps the dry run
-        // actionless (no training job fires)
-        graft.ops.Bpe.encode(df, tc, Seq.empty,
-          out = options.getOrElse("output_column", "tokens").toString))
-      case "count" => propagateSchema(schema)(df =>
-        graft.ops.Bpe.withTokenCount(df, tc, Seq.empty,
-          out = options.getOrElse("output_column", "n_tokens_bpe").toString))
-      case other => Left(new graft.core.SchemaValidationError(
-        s"Unknown bpe method: '$other' (expected count | encode)"))
-    }
-  }
 }
 
 /** Config-driven corpus profiling ([[graft.ops.Profiling]]): one-pass
@@ -946,9 +784,6 @@ class ProfilePlugin(options: Map[String, Any], configDir: Path, label: String)
           exact = options.get("exact").exists(_.toString.toBoolean))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
 }
 
 /** Config-driven multimodal column processing
@@ -1010,14 +845,6 @@ class MultimodalPlugin(options: Map[String, Any], configDir: Path, label: String
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val pc = payloadColumn
-    if (!schema.fieldNames.contains(pc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$pc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-  }
 }
 
 /** Config-driven ANN / similarity search ([[graft.ops.Similarity]]):
@@ -1180,93 +1007,66 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
     } yield out
   }
 
-  /** IVF/IVF-PQ training collects a corpus sample at plan-build time,
-    * so the generic propagate-through-empty-frame dry-run would fail
-    * on zero rows; the output schema is static, declare it directly. */
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
+  /** Kept where executing over zero rows would leave the plan or
+    * fail: the index methods read or write `index_dir`; PCA, the kNN
+    * graphs, IVF, IVF-PQ and MMR train on or sample the rows (or run
+    * jobs) while the plan is built. Their output schemas are static;
+    * the other methods take the derived dry run. */
+  override def dryRunWith(schema: StructType,
+                          schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] = {
-    val embCol0 = options.getOrElse("embedding_column", "embedding").toString
-    if (options.getOrElse("method", "brute").toString == "centroids")
-      return stringList("group_by").flatMap { groups =>
-        (groups :+ embCol0).find(c => !schema.fieldNames.contains(c))
-          .map(c => Left(new SchemaValidationError(
-            s"Column '$c' not found in schema")): Either[Throwable, StructType])
-          .getOrElse(Right(StructType(
-            groups.map(schema(_)) ++ Seq(
-              StructField("centroid", ArrayType(DoubleType)),
-              StructField("n_vectors", LongType, nullable = false)))))
+    val embCol = options.getOrElse("embedding_column", "embedding").toString
+    def need(s: StructType, where: String, cols: String*): Either[Throwable, Unit] =
+      cols.find(c => !s.fieldNames.contains(c)) match {
+        case Some(c) => Left(new SchemaValidationError(s"Column '$c' not found in $where"))
+        case None => Right(())
       }
-    if (options.getOrElse("method", "brute").toString == "quantize_int8")
-      return propagateSchema(schema)(df =>
-        graft.ops.Similarity.quantizeInt8(df, embCol0))
-    if (options.getOrElse("method", "brute").toString == "pca_project") {
-      // pcaProject trains on real rows at call time; static schema
-      return if (!schema.fieldNames.contains(embCol0))
-        Left(new SchemaValidationError(
-          s"Column '$embCol0' not found in schema"))
-      else Right(StructType(schema.fields :+
-        StructField(options.getOrElse("output_column", "pca").toString,
-          ArrayType(DoubleType, containsNull = false))))
+    def neighbors(queryId: DataType, neighborId: DataType) = StructType(Seq(
+      StructField("query_id", queryId),
+      StructField("neighbor_id", neighborId),
+      StructField("cosine", DoubleType),
+      StructField("rank", IntegerType, nullable = false)))
+    options.getOrElse("method", "brute").toString match {
+      case "centroids" | "quantize_int8" | "centroid_outliers" | "brute" | "lsh" =>
+        super.dryRunWith(schema, schemas)
+      case "pca_project" =>
+        need(schema, "schema", embCol).map(_ => StructType(schema.fields :+
+          StructField(options.getOrElse("output_column", "pca").toString,
+            ArrayType(DoubleType, containsNull = false))))
+      case "knn_graph" =>
+        for {
+          idCol <- requiredString("id_column")
+          _ <- need(schema, "schema", idCol, embCol)
+        } yield neighbors(schema(idCol).dataType, schema(idCol).dataType)
+      case "knn_components" =>
+        for {
+          idCol <- requiredString("id_column")
+          _ <- need(schema, "schema", idCol, embCol)
+        } yield StructType(Seq(schema(idCol),
+          StructField("cluster_id", schema(idCol).dataType)))
+      case "index_build" | "index_append" =>
+        for {
+          idCol <- requiredString("id_column")
+          _ <- requiredString("index_dir")
+          _ <- need(schema, "schema", idCol, embCol)
+        } yield schema // the stream passes through
+      case "index_query" =>
+        for {
+          idCol <- requiredString("id_column")
+          _ <- requiredString("index_dir")
+          _ <- need(schema, "schema", idCol, embCol)
+        } yield neighbors(schema(idCol).dataType, schema(idCol).dataType)
+      case "ivf" | "ivfpq" | "mmr" =>
+        for {
+          idCol <- requiredString("id_column")
+          ql <- requiredString("queries_label")
+          qs <- schemas.getOrElse(ql, Left(new NoSuchElementException(
+            s"No input data with label '$ql' for similarity plugin")))
+          _ <- need(schema, "schema", idCol, embCol)
+          _ <- need(qs, s"'$ql' schema", idCol, embCol)
+        } yield neighbors(qs(idCol).dataType, schema(idCol).dataType)
+      case _ => super.dryRunWith(schema, schemas)
     }
-    if (options.getOrElse("method", "brute").toString == "knn_graph")
-      return requiredString("id_column").flatMap(idCol =>
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(embCol0))
-          Left(new SchemaValidationError(
-            s"Column '$embCol0' not found in schema"))
-        else Right(StructType(Seq(
-          StructField("query_id", schema(idCol).dataType, nullable = true),
-          StructField("neighbor_id", schema(idCol).dataType, nullable = true),
-          StructField("cosine", DoubleType, nullable = true),
-          StructField("rank", IntegerType, nullable = false)))))
-    if (options.getOrElse("method", "brute").toString == "knn_components")
-      return requiredString("id_column").flatMap(idCol =>
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(embCol0))
-          Left(new SchemaValidationError(
-            s"Column '$embCol0' not found in schema"))
-        else Right(StructType(Seq(
-          schema(idCol),
-          StructField("cluster_id", schema(idCol).dataType,
-            nullable = true)))))
-    if (options.getOrElse("method", "brute").toString == "centroid_outliers")
-      return stringList("group_by").flatMap(groups =>
-        (groups :+ embCol0).find(c => !schema.fieldNames.contains(c)) match {
-          case Some(c) => Left(new SchemaValidationError(
-            s"Column '$c' not found in schema"))
-          case None => Right(StructType(schema.fields ++ Seq(
-            StructField(options.getOrElse("output_column", "centroid_dist")
-              .toString, DoubleType, nullable = true),
-            StructField("pct_rank", DoubleType, nullable = false))))
-        })
-    for {
-      idCol <- requiredString("id_column")
-      ql <- requiredString("queries_label")
-      qs <- schemas.getOrElse(ql, Left(new NoSuchElementException(
-        s"No input data with label '$ql' for similarity plugin")))
-      out <- {
-        val embCol = options.getOrElse("embedding_column", "embedding").toString
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(embCol))
-          Left(new SchemaValidationError(
-            s"Column '$embCol' not found in schema"))
-        else if (!qs.fieldNames.contains(idCol) || !qs.fieldNames.contains(embCol))
-          Left(new SchemaValidationError(
-            s"Columns '$idCol'/'$embCol' not found in '$ql' schema"))
-        else Right(StructType(Seq(
-          StructField("query_id", qs(idCol).dataType),
-          StructField("neighbor_id", schema(idCol).dataType),
-          StructField("cosine", DoubleType),
-          StructField("rank", IntegerType, nullable = false))))
-      }
-    } yield out
   }
 }
 
@@ -1324,22 +1124,21 @@ class PercentilesPlugin(options: Map[String, Any], configDir: Path, label: Strin
       }
     } yield out
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
+  /** Kept for the percentile methods: "auto" measures the group
+    * cardinality with a Spark job while the plan is built. The band
+    * filter takes the derived dry run. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
+    if (options.getOrElse("method", "auto").toString == "band")
+      super.dryRun(schema)
+    else for {
       keys <- stringList("group_by")
       valueCol <- requiredString("value_column")
       _ <- (keys :+ valueCol).find(c => !schema.fieldNames.contains(c))
         .map(c => Left(new SchemaValidationError(
           s"Column '$c' not found in schema"))).getOrElse(Right(()))
-      out <- options.getOrElse("method", "auto").toString match {
-        case "band" => band.map(_ => StructType(schema.fields :+
-          StructField(options.getOrElse("output_column", "pct_rank").toString,
-            DoubleType, nullable = false)))
-        case _ => ps.map(pcts => StructType(
-          keys.map(schema(_)) ++
-            pcts.map { case (lbl, _) => StructField(lbl, DoubleType) }))
-      }
-    } yield out
+      pcts <- ps
+    } yield StructType(keys.map(schema(_)) ++
+      pcts.map { case (lbl, _) => StructField(lbl, DoubleType) })
 }
 
 /** Config-driven Gopher/MassiveText quality gate
@@ -1381,14 +1180,6 @@ class GopherFilterPlugin(options: Map[String, Any], configDir: Path, label: Stri
           s"Unknown gopher_filter mode: '$other'")
       }
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-  }
 }
 
 /** Config-driven duplicated-span analysis ([[graft.ops.DupSpans]],
@@ -1429,10 +1220,10 @@ class DupSpansPlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     } yield out
 
-  /** Static schema: spanStats persists an intermediate frame, so the
-    * propagate-through-empty-frame dry-run would leave a stray cache
-    * registration per `check` invocation. */
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  /** Kept: spanStats persists an intermediate frame, so executing
+    * over zero rows would leave a stray cache registration per
+    * `check` invocation. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       idCol <- requiredString("id_column")
       out <- {
@@ -1486,13 +1277,6 @@ class C4Plugin(options: Map[String, Any], configDir: Path, label: String)
           s"Unknown c4_filter mode: '$other'")
       }
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-  }
 }
 
 /** Config-driven corpus bigram-LM scoring ([[graft.ops.LmScore]],
@@ -1528,25 +1312,6 @@ class LmScorePlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      out <- {
-        val tc = options.getOrElse("text_column", "text").toString
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(tc))
-          Left(new SchemaValidationError(
-            s"Column '$tc' not found in schema"))
-        else if (options.getOrElse("mode", "score").toString == "filter")
-          Right(schema) // semi-join keeps the corpus schema unchanged
-        else Right(StructType(Seq(schema(idCol),
-          StructField("n_bigrams", LongType, nullable = false),
-          StructField("avg_logprob", DoubleType))))
-      }
-    } yield out
 }
 
 /** Config-driven TF-IDF keyword extraction ([[graft.ops.Tfidf]]):
@@ -1565,16 +1330,6 @@ class TfidfPlugin(options: Map[String, Any], configDir: Path, label: String)
           options.getOrElse("text_column", "text").toString,
           k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(10)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { idCol =>
-      val tc = options.getOrElse("text_column", "text").toString
-      if (!schema.fieldNames.contains(idCol))
-        Left(new SchemaValidationError(s"Column '$idCol' not found in schema"))
-      else if (!schema.fieldNames.contains(tc))
-        Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-      else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven BM25 ranked retrieval ([[graft.ops.Bm25]]): per-query
@@ -1644,31 +1399,33 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
           b = options.get("b").map(_.toString.toDouble).getOrElse(0.75)))
     } yield out
 
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
+  /** Kept for `queries_label`: that stream is collected driver-side
+    * and must not be empty, which a zero-row stand-in always is.
+    * Inline queries take the derived dry run. */
+  override def dryRunWith(schema: StructType,
+                          schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      _ <- options.get("queries_label").map(_.toString) match {
-        case None => inlineQueries().map(_ => ())
-        case Some(ql) => schemas.getOrElse(ql,
-          Left(new NoSuchElementException(
-            s"No input data with label '$ql' for bm25 plugin"))).map(_ => ())
-      }
-      tc = options.getOrElse("text_column", "text").toString
-      out <-
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(tc))
-          Left(new SchemaValidationError(
-            s"Column '$tc' not found in schema"))
-        else Right(StructType(Seq(
-          StructField("query_id", StringType, nullable = false),
-          StructField("rank", LongType, nullable = false),
-          schema(idCol),
-          StructField("score", DoubleType, nullable = true))))
-    } yield out
+    options.get("queries_label").map(_.toString) match {
+      case None => super.dryRunWith(schema, schemas)
+      case Some(ql) => for {
+        idCol <- requiredString("id_column")
+        _ <- schemas.getOrElse(ql, Left(new NoSuchElementException(
+          s"No input data with label '$ql' for bm25 plugin")))
+        tc = options.getOrElse("text_column", "text").toString
+        out <-
+          if (!schema.fieldNames.contains(idCol))
+            Left(new SchemaValidationError(
+              s"Column '$idCol' not found in schema"))
+          else if (!schema.fieldNames.contains(tc))
+            Left(new SchemaValidationError(
+              s"Column '$tc' not found in schema"))
+          else Right(StructType(Seq(
+            StructField("query_id", StringType, nullable = false),
+            StructField("rank", LongType, nullable = false),
+            schema(idCol),
+            StructField("score", DoubleType, nullable = true))))
+      } yield out
+    }
 }
 
 /** Config-driven corpus n-gram heavy hitters ([[graft.ops.Ngrams]]):
@@ -1689,20 +1446,6 @@ class NgramsPlugin(options: Map[String, Any], configDir: Path, label: String)
           n = options.get("n").map(_.toString.toDouble.toInt).getOrElse(2),
           k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(100)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { idCol =>
-      val tc = options.getOrElse("text_column", "text").toString
-      if (!schema.fieldNames.contains(idCol))
-        Left(new SchemaValidationError(s"Column '$idCol' not found in schema"))
-      else if (!schema.fieldNames.contains(tc))
-        Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-      else Right(StructType(Seq(
-        StructField("rank", LongType, nullable = false),
-        StructField("ngram", StringType, nullable = true),
-        StructField("n_occurrences", LongType, nullable = false),
-        StructField("n_docs", LongType, nullable = false))))
-    }
 }
 
 /** Config-driven blocked fuzzy matching ([[graft.ops.FuzzyJoin]]):
@@ -1743,50 +1486,6 @@ class FuzzyPairsPlugin(options: Map[String, Any], configDir: Path, label: String
           } yield out
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      strCol <- requiredString("string_column")
-      out <-
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(strCol))
-          Left(new SchemaValidationError(
-            s"Column '$strCol' not found in schema"))
-        else options.get("reference_label").map(_.toString) match {
-          case None => Right(StructType(Seq(
-            StructField("id_a", schema(idCol).dataType, nullable = true),
-            StructField("id_b", schema(idCol).dataType, nullable = true),
-            StructField("s_a", StringType, nullable = true),
-            StructField("s_b", StringType, nullable = true),
-            StructField("distance", LongType, nullable = true))))
-          case Some(rl) =>
-            schemas.getOrElse(rl, Left(new NoSuchElementException(
-              s"No input data with label '$rl' for fuzzy_pairs plugin")))
-              .flatMap { rs =>
-                val rid = options.getOrElse("reference_id_column", idCol)
-                  .toString
-                val rstr = options.getOrElse("reference_string_column", strCol)
-                  .toString
-                Seq(rid, rstr).find(c => !rs.fieldNames.contains(c)) match {
-                  case Some(c) => Left(new SchemaValidationError(
-                    s"Column '$c' not found in reference schema"))
-                  case None => Right(StructType(Seq(
-                    StructField("left_id", schema(idCol).dataType,
-                      nullable = true),
-                    StructField("right_id", rs(rid).dataType,
-                      nullable = true),
-                    StructField("s_l", StringType, nullable = true),
-                    StructField("s_r", StringType, nullable = true),
-                    StructField("distance", LongType, nullable = true))))
-                }
-              }
-        }
-    } yield out
 }
 
 /** Config-driven point-in-interval join ([[graft.plans.IntervalJoin]]
@@ -1813,31 +1512,6 @@ class IntervalJoinPlugin(options: Map[String, Any], configDir: Path, label: Stri
       hi <- requiredString("hi_column")
       out <- graft.core.Errors.safe(
         graft.plans.IntervalJoin.pointInInterval(df, intervals, p, lo, hi))
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      il <- requiredString("intervals_label")
-      is <- schemas.getOrElse(il, Left(new NoSuchElementException(
-        s"No input data with label '$il' for interval_join plugin")))
-      p <- requiredString("point_column")
-      lo <- requiredString("lo_column")
-      hi <- requiredString("hi_column")
-      out <-
-        if (!schema.fieldNames.contains(p))
-          Left(new SchemaValidationError(
-            s"Column '$p' not found in schema"))
-        else Seq(lo, hi).find(c => !is.fieldNames.contains(c)) match {
-          case Some(c) => Left(new SchemaValidationError(
-            s"Column '$c' not found in intervals schema"))
-          case None =>
-            // the public API casts point/lo/hi to long in place
-            def cast(s: StructType, names: Set[String]) = s.fields.map(f =>
-              if (names(f.name)) f.copy(dataType = LongType) else f)
-            Right(StructType(cast(schema, Set(p)) ++ cast(is, Set(lo, hi))))
-        }
     } yield out
 }
 
@@ -1885,41 +1559,6 @@ class AsOfJoinPlugin(options: Map[String, Any], configDir: Path, label: String)
           "side first (e.g. a rename plugin on the labeled stream)"))
       case None => Right(())
     }
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- requiredString("right_label")
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for asof_join plugin")))
-      on <- stringList("on")
-      lt <- requiredString("left_time")
-      rt <- requiredString("right_time")
-      out <- {
-        val missing =
-          (on :+ lt).find(c => !schema.fieldNames.contains(c))
-            .map(c => s"Column '$c' not found in schema")
-            .orElse((on :+ rt).find(c => !rs.fieldNames.contains(c))
-              .map(c => s"Column '$c' not found in right schema"))
-        missing match {
-          case Some(m) => Left(new SchemaValidationError(m))
-          case None =>
-            collision(schema.fieldNames.toSeq, rs.fieldNames.toSeq, on)
-              .left.map(e => new SchemaValidationError(e.getMessage))
-              .map { _ =>
-                // output = left columns + right payload (non-key) cols.
-                // Payload is ALWAYS nullable at runtime: execute unpacks
-                // it from the nullable `_match` struct (and how="left"
-                // yields null payloads), so the dry-run schema must not
-                // promise the right side's original non-nullability.
-                val payload = rs.fields.filterNot(f => on.contains(f.name))
-                  .map(_.copy(nullable = true))
-                StructType(schema.fields ++ payload)
-              }
-        }
-      }
-    } yield out
 }
 
 /** Config-driven SCD type-2 construction ([[graft.ops.Scd]]): collapse
@@ -1959,25 +1598,6 @@ class ScdPlugin(options: Map[String, Any], configDir: Path, label: String)
         case other => Left(new PluginExecutionError(
           s"Unknown scd2 mode: '$other'"))
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keys <- stringList("key_columns")
-      order <- stringList("order_columns")
-      extra <-
-        if (options.getOrElse("mode", "scd2").toString == "latest")
-          Right(Seq.empty[String])
-        else for {
-          attrs <- stringList("attr_columns")
-          validFrom <- requiredString("valid_from_column")
-        } yield attrs :+ validFrom
-      _ <- (keys ++ order ++ extra)
-        .find(c => !schema.fieldNames.contains(c))
-        .map(c => Left(new SchemaValidationError(
-          s"Column '$c' not found in schema"))).getOrElse(Right(()))
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
     } yield out
 }
 
@@ -2058,10 +1678,11 @@ class GraphPlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     } yield out
 
-  /** Static schema: pagerank runs jobs eagerly, so the generic
-    * propagate-through-empty-frame dry-run would execute (and divide
-    * rank mass by a zero node count). */
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  /** Kept for pagerank and triangles, which run jobs while the plan
+    * is built (and pagerank divides rank mass by a zero node count on
+    * zero rows); the other methods take the derived dry run. Every
+    * method first checks that the edge columns share a type. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       method <- requiredString("method")
       src <- requiredString("src_column")
@@ -2080,19 +1701,10 @@ class GraphPlugin(options: Map[String, Any], configDir: Path, label: String)
           case "pagerank" => Right(StructType(Seq(
             StructField("node", schema(src).dataType),
             StructField("rank", DoubleType))))
-          case "degrees" => Right(StructType(Seq(
-            StructField("node", schema(src).dataType),
-            StructField("out_degree", LongType, nullable = false),
-            StructField("in_degree", LongType, nullable = false),
-            StructField("degree", LongType, nullable = false))))
           case "triangles" => Right(StructType(Seq(
             StructField("node", schema(src).dataType),
             StructField("n_triangles", LongType, nullable = false))))
-          case "components" => Right(StructType(Seq(
-            StructField("node", schema(src).dataType),
-            StructField("cluster_id", schema(src).dataType))))
-          case other => Left(new PluginExecutionError(
-            s"Unknown graph method: '$other'"))
+          case _ => super.dryRun(schema)
         }
       }
     } yield out
@@ -2107,14 +1719,6 @@ class TextAnalysisPlugin(options: Map[String, Any], configDir: Path, label: Stri
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe(
       Text.analyze(df, options.getOrElse("text_column", "text").toString))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => Text.analyze(df, tc))
-  }
 }
 
 /** Config-driven multinomial Naive Bayes classifier
@@ -2147,25 +1751,6 @@ class ClassifyNbPlugin(options: Map[String, Any], configDir: Path, label: String
           options.get("round").map(_.toString.toDouble.toInt).getOrElse(4))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      labelCol <- requiredString("label_column")
-      out <- {
-        val tc = options.getOrElse("text_column", "text").toString
-        val missing = Seq(idCol, labelCol, tc)
-          .filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(Seq(
-          schema(idCol),
-          StructField("pred", schema(labelCol).dataType, nullable = true),
-          StructField("score", org.apache.spark.sql.types.DoubleType,
-            nullable = true))))
-      }
-    } yield out
 }
 
 /** Config-driven time-grid resampling ([[graft.ops.Resample]]): per
@@ -2188,26 +1773,6 @@ class ResamplePlugin(options: Map[String, Any], configDir: Path, label: String)
       out <- graft.core.Errors.safe(
         graft.ops.Resample.forwardFill(df, keyCol, tsCol, valueCol,
           step.toString.toDouble.toLong))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      valueCol <- requiredString("value_column")
-      _ <- required("step_seconds")
-      out <- {
-        val missing = Seq(keyCol, tsCol, valueCol)
-          .filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(Seq(
-          schema(keyCol),
-          StructField("slot_start", LongType, nullable = false),
-          StructField("value", schema(valueCol).dataType, nullable = true),
-          StructField("n_obs", LongType, nullable = false))))
-      }
     } yield out
 }
 
@@ -2257,16 +1822,11 @@ class ExpectPlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     }
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    graft.core.Errors.safe {
-      options.getOrElse("mode", "report").toString match {
-        case "gate" => schema
-        case _ => StructType(Seq(
-          StructField("rule", StringType, nullable = false),
-          StructField("n_violations", LongType, nullable = true),
-          StructField("pass", BooleanType, nullable = true)))
-      }
-    }
+  /** Kept for mode "gate", which runs its checks as a Spark job while
+    * the plan is built; the report takes the derived dry run. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
+    if (options.getOrElse("mode", "report").toString == "gate") Right(schema)
+    else super.dryRun(schema)
 }
 
 /** Config-driven feature-hashing embeddings ([[graft.ops.HashEmbed]]):
@@ -2293,21 +1853,6 @@ class HashEmbedPlugin(options: Map[String, Any], configDir: Path, label: String)
           Seq(idCol), "left")
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      out <- {
-        val tc = options.getOrElse("text_column", "text").toString
-        val missing = Seq(idCol, tc).filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(schema.fields :+
-          StructField("embedding", ArrayType(DoubleType, containsNull = true),
-            nullable = true)))
-      }
-    } yield out
 }
 
 /** Config-driven funnel analysis ([[graft.ops.Funnel]]): per-key
@@ -2329,25 +1874,6 @@ class FunnelPlugin(options: Map[String, Any], configDir: Path, label: String)
         graft.ops.Funnel.depth(df, keyCol, tsCol, tyCol, steps,
           options.get("within_seconds").map(_.toString.toDouble.toLong)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      tyCol <- requiredString("type_column")
-      steps <- stringList("steps")
-      out <- {
-        val missing = Seq(keyCol, tsCol, tyCol)
-          .filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(
-          schema(keyCol) +:
-            StructField("funnel_depth", LongType, nullable = false) +:
-            steps.map(st => StructField(s"t_$st", LongType, nullable = true))))
-      }
-    } yield out
 }
 
 /** Config-driven cohort retention ([[graft.ops.Cohorts]]): group keys
@@ -2367,23 +1893,6 @@ class CohortsPlugin(options: Map[String, Any], configDir: Path, label: String)
       out <- graft.core.Errors.safe(
         graft.ops.Cohorts.retention(df, keyCol, tsCol,
           p.toString.toDouble.toLong))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      _ <- required("period_seconds")
-      out <- {
-        val missing = Seq(keyCol, tsCol).filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(Seq(
-          StructField("cohort_period", LongType, nullable = true),
-          StructField("period_offset", LongType, nullable = true),
-          StructField("n_active", LongType, nullable = false))))
-      }
     } yield out
 }
 
@@ -2435,48 +1944,5 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
         case other => Left(new PluginExecutionError(
           s"Unknown url method: '$other' (expected parse | cap_per_domain)"))
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      method <- requiredString("method")
-      urlCol <- requiredString("url_column")
-      out <-
-        if (!schema.fieldNames.contains(urlCol))
-          Left(new SchemaValidationError(
-            s"Column '$urlCol' not found in schema"))
-        else method match {
-          case "parse" =>
-            // withColumn REPLACES an existing column of the same
-            // name, so the declared schema must too: drop same-named
-            // input fields before appending (chained parse stages,
-            // or inputs already carrying url_*, stay valid)
-            val urlFields = Seq(
-              StructField("url_scheme", StringType, nullable = true),
-              StructField("url_host", StringType, nullable = true),
-              StructField("url_path", StringType, nullable = true),
-              StructField("url_query", StringType, nullable = true),
-              StructField("url_domain", StringType, nullable = true),
-              StructField("url_subdomain", StringType, nullable = true),
-              StructField("url_tld", StringType, nullable = true),
-              StructField("url_path_depth", IntegerType, nullable = true))
-            val byName = urlFields.map(f => f.name -> f).toMap
-            // replace IN PLACE (withColumn keeps the original column
-            // position); append only the genuinely new fields
-            val replaced = schema.fields.map(f =>
-              byName.getOrElse(f.name, f))
-            val existing = schema.fieldNames.toSet
-            Right(StructType(replaced ++
-              urlFields.filterNot(f => existing(f.name))))
-          case "cap_per_domain" =>
-            requiredString("id_column").flatMap { idCol =>
-              if (!schema.fieldNames.contains(idCol))
-                Left(new SchemaValidationError(
-                  s"Column '$idCol' not found in schema"))
-              else Right(schema) // cap filters rows, schema unchanged
-            }
-          case other => Left(new PluginExecutionError(
-            s"Unknown url method: '$other' (expected parse | cap_per_domain)"))
-        }
     } yield out
 }

@@ -2,12 +2,13 @@ package graft.plugins.transform
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Errors, MultiStreamTransformPlugin, PluginExecutionError,
-  SchemaValidationError, TransformPlugin}
+import graft.core.{Errors, GraftError, MultiStreamTransformPlugin,
+  PluginExecutionError, SchemaValidationError, TransformPlugin}
 
 /** Shared plumbing for transform plugins. */
 abstract class BaseTransformPlugin(val options: Map[String, Any],
@@ -30,17 +31,47 @@ abstract class BaseTransformPlugin(val options: Map[String, Any],
         s"Option '$key' must be a list of strings, got: $other"))
     }
 
-  /** Symbolic schema propagation without data: apply `f` to an EMPTY
-    * frame with the input schema and read the result schema. This is
-    * Catalyst's analyzer doing exactly what Polars' dry-run schema
-    * walk does (ref pipeline.py:61-94) — resolution only, no job. */
-  protected def propagateSchema(schema: StructType)(
-      f: DataFrame => DataFrame): Either[Throwable, StructType] =
+  /** The dry run `check` uses: `execute` (or `executeWith`, each
+    * labeled schema standing in as a zero-row frame) analysed over a
+    * zero-row frame of `schema`. Catalyst's analyzer resolves the very
+    * plan `run` builds, the way Polars' dry-run schema walk does (ref
+    * pipeline.py:61-94), so `check` declares exactly the schema `run`
+    * produces. A plugin overrides this only where executing over zero
+    * rows would do something its declared schema avoids. */
+  def dryRun(schema: StructType): Either[Throwable, StructType] =
+    dryRunWith(schema, Map.empty)
+
+  def dryRunWith(schema: StructType,
+                 schemas: Map[String, Either[Throwable, StructType]])
+      : Either[Throwable, StructType] =
     Errors.safe {
       val spark = SparkSession.active
-      f(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)).schema
-    }.left.map(e => new SchemaValidationError(e.getMessage, e))
+      def zeroRows(s: StructType): DataFrame =
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+      val out = this match {
+        case m: MultiStreamTransformPlugin =>
+          m.executeWith(zeroRows(schema),
+            schemas.map { case (l, s) => l -> s.map(zeroRows) })
+        case _ => execute(zeroRows(schema))
+      }
+      out.map(_.schema)
+    }.flatten.left.map(BaseTransformPlugin.schemaError)
+}
+
+object BaseTransformPlugin {
+  /** Plugin errors pass through; Spark's unresolved-column error reads
+    * as the reference's "Column 'x' not found in schema"; anything
+    * else fails validation with Spark's message. */
+  private def schemaError(e: Throwable): Throwable = e match {
+    case g: GraftError => g
+    case s: SparkThrowable if Option(s.getCondition).exists(c =>
+        c.startsWith("UNRESOLVED_COLUMN") || c == "FIELD_NOT_FOUND") =>
+      val ps = s.getMessageParameters
+      val name = Option(ps.get("objectName")).orElse(Option(ps.get("fieldName")))
+        .getOrElse("").replace("`", "")
+      new SchemaValidationError(s"Column '$name' not found in schema", e)
+    case _ => new SchemaValidationError(e.getMessage, e)
+  }
 }
 
 /** A5/A6 — the reference's only shipped transform: multiply one numeric
@@ -97,24 +128,15 @@ class ColumnMultiplierPlugin(options: Map[String, Any], configDir: Path, label: 
       }
     }
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    opts().flatMap { case (c, m) =>
+  /** Kept for the reference's "expected numeric type" message
+    * (multiplier.py dry_run); the schema itself is the derived one. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
+    opts().flatMap { case (c, _) =>
       schema.fields.find(_.name == c) match {
-        case None => Left(new SchemaValidationError(
-          s"Column '$c' not found in schema"))
         case Some(f) if !f.dataType.isInstanceOf[NumericType] =>
           Left(new SchemaValidationError(
             s"Column '$c' has type ${f.dataType.simpleString}, expected numeric type"))
-        case Some(_) =>
-          // declare what execute actually produces, so `check` is
-          // trustworthy (integral/decimal x fractional widens to
-          // double, decimal x whole widens precision): symbolic
-          // propagation through execute on an empty frame — no
-          // hand-modeled type rules to drift (the reference's dry_run
-          // claims unchanged even where its runtime widens; accuracy
-          // wins here)
-          propagateSchema(schema)(df =>
-            execute(df).fold(e => throw e, identity))
+        case _ => super.dryRun(schema)
       }
     }
 }
@@ -128,10 +150,6 @@ class FilterPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     requiredString("predicate").flatMap(p => Errors.safe(df.filter(expr(p))))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("predicate").flatMap(p =>
-      propagateSchema(schema)(_.filter(expr(p))))
 }
 
 /** Projection (ref docs/plugin_development.md:1506-1508). `columns`
@@ -143,10 +161,6 @@ class SelectPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     stringList("columns").flatMap(cs =>
       Errors.safe(df.select(cs.map(expr): _*)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("columns").flatMap(cs =>
-      propagateSchema(schema)(_.select(cs.map(expr): _*)))
 }
 
 /** Drop columns (ref docs/plugin_development.md:1518-1519; dry-run
@@ -158,7 +172,9 @@ class DropPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     stringList("columns").flatMap(cs => Errors.safe(df.drop(cs: _*)))
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  /** Kept for reference parity: the reference's dry run rejects a
+    * missing column that Spark's `drop` silently ignores. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     stringList("columns").flatMap { cs =>
       val missing = cs.filterNot(c => schema.fieldNames.contains(c))
       if (missing.nonEmpty)
@@ -180,13 +196,6 @@ class WithColumnPlugin(options: Map[String, Any], configDir: Path, label: String
       e <- requiredString("expression")
       out <- Errors.safe(df.withColumn(c, expr(e)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      e <- requiredString("expression")
-      out <- propagateSchema(schema)(_.withColumn(c, expr(e)))
-    } yield out
 }
 
 /** Cast a column (ref examples/generate_sample_data.py:82-91 `df.cast`). */
@@ -199,15 +208,6 @@ class CastPlugin(options: Map[String, Any], configDir: Path, label: String)
       c <- requiredString("column")
       t <- requiredString("dtype")
       out <- Errors.safe(df.withColumn(c, col(c).cast(t)))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      t <- requiredString("dtype")
-      _ <- if (schema.fieldNames.contains(c)) Right(())
-           else Left(new SchemaValidationError(s"Column '$c' not found in schema"))
-      out <- propagateSchema(schema)(_.withColumn(c, col(c).cast(t)))
     } yield out
 }
 
@@ -228,7 +228,10 @@ class RenamePlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     mapping().flatMap(m => Errors.safe(df.withColumnsRenamed(m)))
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  /** Kept for reference parity: the reference's dry run rejects a
+    * missing column that Spark's `withColumnsRenamed` silently
+    * ignores. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     mapping().flatMap { m =>
       val missing = m.keys.filterNot(schema.fieldNames.contains)
       if (missing.nonEmpty)
@@ -263,7 +266,7 @@ class GroupByAggPlugin(options: Map[String, Any], configDir: Path, label: String
         } yield cols.map(c => s"$fn($c) AS ${c}_$fn")
     }
 
-  private def build(df: DataFrame): Either[Throwable, DataFrame] =
+  def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       keys <- stringList("group_by")
       aggs <- aggExprs()
@@ -274,14 +277,6 @@ class GroupByAggPlugin(options: Map[String, Any], configDir: Path, label: String
         df.groupBy(keys.map(col): _*)
           .agg(expr(aggs.head), aggs.tail.map(expr): _*))
     } yield out
-
-  def execute(df: DataFrame): Either[Throwable, DataFrame] = build(df)
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    propagateSchemaVia(schema)
-
-  private def propagateSchemaVia(schema: StructType): Either[Throwable, StructType] =
-    propagateSchema(schema)(df => build(df).fold(e => throw e, identity))
 }
 
 /** Join with the stream of another label (`right_label`) — the
@@ -315,25 +310,6 @@ class JoinPlugin(options: Map[String, Any], configDir: Path, label: String)
         df.join(r, on, how)
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- rightLabel()
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for join plugin")))
-      on <- stringList("on")
-      how = options.get("how").map(_.toString).getOrElse("inner")
-      out <- Errors.safe {
-        val spark = SparkSession.active
-        val l = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        val r = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), rs)
-        l.join(r, on, how).schema
-      }.left.map(e => new SchemaValidationError(e.getMessage, e))
-    } yield out
 }
 
 /** Sort (ref docs/plugin_development.md:1527-1528). `by` is a list of
@@ -357,15 +333,6 @@ class SortPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     sortCols().flatMap(cs => Errors.safe(df.orderBy(cs: _*)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("by").flatMap { bys =>
-      val missing = bys.filterNot(schema.fieldNames.contains)
-      if (missing.nonEmpty)
-        Left(new SchemaValidationError(
-          s"Column '${missing.head}' not found in schema"))
-      else Right(schema)
-    }
 }
 
 /** when/then/otherwise conditional column
@@ -385,18 +352,6 @@ class WhenThenPlugin(options: Map[String, Any], configDir: Path, label: String)
         df.withColumn(c, otherE.fold(base)(o => base.otherwise(expr(o))))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      cond <- requiredString("when")
-      thenE <- requiredString("then")
-      otherE = options.get("otherwise").map(_.toString)
-      out <- propagateSchema(schema) { df =>
-        val base = when(expr(cond), expr(thenE))
-        df.withColumn(c, otherE.fold(base)(o => base.otherwise(expr(o))))
-      }
-    } yield out
 }
 
 /** Distinct / dropDuplicates (subset optional). */
@@ -412,8 +367,6 @@ class DistinctPlugin(options: Map[String, Any], configDir: Path, label: String)
         case None => df.distinct()
       }
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = Right(schema)
 }
 
 /** Limit / top-k head. */
@@ -424,9 +377,6 @@ class LimitPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     required("n").flatMap(n =>
       Errors.safe(df.limit(n.toString.toDouble.toInt)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    required("n").map(_ => schema)
 }
 
 /** Union with another labeled stream (by name, allowing missing
@@ -451,18 +401,6 @@ class UnionPlugin(options: Map[String, Any], configDir: Path, label: String)
         else df.union(right)
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- requiredString("right_label")
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for union plugin")))
-      _ <- if (rs.size == schema.size) Right(())
-           else Left(new SchemaValidationError(
-             s"Union requires same column count: ${schema.size} vs ${rs.size}"))
-    } yield schema
 }
 
 /** Free-form SQL over the labeled streams: every stream is registered
@@ -503,23 +441,5 @@ class SqlPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
         rebind(parent, scratch.sql(q))
       }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      q <- requiredString("query")
-      out <- Errors.safe {
-        val scratch = SparkSession.active.newSession()
-        def empty(s: StructType) = scratch.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-        empty(schema).createOrReplaceTempView("input")
-        schemas.foreach {
-          case (l, Right(s)) => empty(s).createOrReplaceTempView(l)
-          case _ => ()
-        }
-        scratch.sql(q).schema
-      }.left.map(e => new SchemaValidationError(e.getMessage, e))
     } yield out
 }

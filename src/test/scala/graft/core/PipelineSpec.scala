@@ -3,7 +3,7 @@ package graft.core
 import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -98,9 +98,42 @@ class PipelineSpec extends AnyFunSuite {
 
   test("dry-run chain propagates schema symbolically") {
     val init: StructType = frame(Seq(1L)).schema
-    val out = Pipeline.executeDryRunChain(Right(init),
-      Seq(new Dummy("c1"), new Dummy("c2")))
+    val out = Pipeline.dryRunLabeledTransformChain(Map("default" -> Right(init)),
+      Seq(new Dummy("c1"), new Dummy("c2")))("default")
     assert(out.toOption.get.fieldNames.toSeq == Seq("a", "c1", "c2"))
+  }
+
+  test("dry-run routing: a label-routed transform never meets another " +
+      "label's schema") {
+    val docs = StructType(Seq(StructField("doc_id", LongType)))
+    val stats = StructType(Seq(StructField("lang", StringType)))
+    // needs `lang`, which only the `stats` stream carries
+    val byLang = new Dummy("by_lang", label = "stats") {
+      override def dryRun(s: StructType): Either[Throwable, StructType] =
+        if (s.fieldNames.contains("lang")) super.dryRun(s)
+        else Left(new SchemaValidationError("no such column: lang"))
+    }
+    val out = Pipeline.dryRunLabeledTransformChain(
+      Map("default" -> Right(docs), "stats" -> Right(stats)),
+      Seq(new Dummy("d1"), byLang))
+    assert(out("default").toOption.get.fieldNames.toSeq == Seq("doc_id", "d1"))
+    assert(out("stats").toOption.get.fieldNames.toSeq == Seq("lang", "by_lang"))
+    // a missing label stores a Left, as in run
+    val missing = Pipeline.dryRunLabeledTransformChain(
+      Map("default" -> Right(docs)), Seq(byLang))
+    assert(missing("default").isRight)
+    assert(missing("stats").left.toOption.get.getMessage
+      .contains("No input data with label 'stats'"))
+    // ... while a sink's missing label short-circuits, as in run
+    val sink = new OutputPlugin {
+      val name = "sink"; val options: Map[String, Any] = Map.empty
+      val configDir: Path = dir
+      override val label = "absent"
+      def execute(df: DataFrame): Either[Throwable, Unit] = Right(())
+      def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
+    }
+    assert(Pipeline.dryRunLabeledOutput(out, Seq(sink)).left.toOption.get
+      .getMessage.contains("No data with label 'absent'"))
   }
 
   test("output dry-run fans out the ORIGINAL schema (ref pipeline.py:97-117)") {
@@ -117,7 +150,7 @@ class PipelineSpec extends AnyFunSuite {
       }
     }
     val init: StructType = frame(Seq(1L)).schema // 1 column
-    val out = Pipeline.executeOutputDryRun(Right(init),
+    val out = Pipeline.dryRunLabeledOutput(Map("default" -> Right(init)),
       Seq(sink("o1"), sink("o2"), sink("o3")))
     assert(validated == List(1, 1, 1)) // each saw the ORIGINAL 1-col schema
     // ... and the returned value is the LAST sink's result
@@ -131,7 +164,7 @@ class PipelineSpec extends AnyFunSuite {
         Left(new SchemaValidationError("boom dry failed"))
     }
     validated = Nil
-    val bad = Pipeline.executeOutputDryRun(Right(init),
+    val bad = Pipeline.dryRunLabeledOutput(Map("default" -> Right(init)),
       Seq(sink("o1"), boom, sink("o2")))
     assert(bad.isLeft && validated == List(1)) // o2 never validated
   }

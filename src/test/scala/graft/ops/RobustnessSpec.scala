@@ -176,6 +176,40 @@ class RobustnessSpec extends AnyFunSuite {
     }
   }
 
+  test("mix sampling passes a zero-row input through unchanged") {
+    val none = Seq.empty[(Long, String, Long)].toDF("id", "s", "m")
+    val outs = Seq(
+      Sampling.mixToWeights(none, "s", "id", Map("a" -> 1.0)),
+      Sampling.mixToBudgetWeights(none, "s", "id", "m", Map("a" -> 1.0)),
+      Sampling.mixByTemperature(none, "s", "id", temperature = 2.0),
+      Sampling.mixByTemperature(none, "s", "id", temperature = 2.0,
+        budgetCol = Some("m")))
+    for (out <- outs) {
+      assert(out.schema == none.schema)
+      assert(out.count() == 0)
+    }
+  }
+
+  test("mix sampling over rows with no weighted source still fails") {
+    val others = Seq((1L, "z", 5L), (2L, null.asInstanceOf[String], 3L))
+      .toDF("id", "s", "m")
+    for (mix <- Seq(
+        () => Sampling.mixToWeights(others, "s", "id", Map("a" -> 1.0)),
+        () => Sampling.mixToBudgetWeights(others, "s", "id", "m",
+          Map("a" -> 1.0)))) {
+      val e = intercept[IllegalArgumentException](mix())
+      assert(e.getMessage.contains("no weighted source present in the data"))
+    }
+    // temperature mixing weighs every source present: rows whose
+    // budget is all zero leave none
+    val massless = Seq((1L, "a", 0L)).toDF("id", "s", "m")
+    val e = intercept[IllegalArgumentException] {
+      Sampling.mixByTemperature(massless, "s", "id", temperature = 2.0,
+        budgetCol = Some("m"))
+    }
+    assert(e.getMessage.contains("no non-empty source present"))
+  }
+
   test("mixByTemperature refuses a high-cardinality group column") {
     // passing an id as the domain column would collect one row per
     // distinct value — must fail with the actual mistake named
