@@ -12,7 +12,11 @@ import org.slf4j.LoggerFactory
   * plan that Catalyst later optimizes (pushdown, pruning, join
   * strategy) as a whole at sink time — the exact architecture the
   * reference gets from Polars lazy frames (docs/plugin_development.md:
-  * 536-555). Nothing here runs a Spark job except OutputPlugin.execute.
+  * 536-555). Nothing here runs a Spark job itself: sinks run the plan
+  * in OutputPlugin.execute, and the eager ops listed in
+  * [[BasePlugin]]'s engine rule run actions while a transform builds
+  * its plan, computing their input once through
+  * [[graft.ops.Lineage.once]].
   */
 object Pipeline {
   private val log = LoggerFactory.getLogger(getClass)

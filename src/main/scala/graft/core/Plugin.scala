@@ -16,9 +16,14 @@ import org.apache.spark.sql.types.StructType
   * `collect()/sink_*()` (reference docs/spec.md:30-31).
   *
   * Engine rule (docs/plugin_development.md:552 "Don't call collect()"):
-  * input/transform plugins MUST NOT trigger Spark actions; only output
-  * plugins may. This keeps the whole chain one Catalyst plan so
-  * pushdown/pruning span plugin boundaries.
+  * input/transform plugins only grow the plan; output plugins run it,
+  * so pushdown/pruning span plugin boundaries. Ops that need data to
+  * build their plan are the exception and run Spark actions inside
+  * `execute` (component rounds, per-source counts, k-means, PageRank).
+  * Those whose result re-reads the input — dedup `minhash_clustered*`,
+  * sample `mix_*` and `split_leakage_safe` with `pair_method =
+  * "minhash"` — compute it once through [[graft.ops.Lineage.once]],
+  * so neither their jobs nor the sink re-run the upstream chain.
   */
 trait BasePlugin {
   /** Human-readable plugin name used in logs and error messages. */

@@ -126,10 +126,12 @@ object Dedup {
     * ReuseExchange, and the one-hash affine kernel makes any
     * remaining recompute ~0.1 s per million docs per core — pair
     * volume, not signature passes, dominates (A/B evidence in
-    * [[graft.tools.AbMinhash]]). Callers running this over an
-    * EXPENSIVE upstream chain should persist their input — and at
-    * petabyte scale run [[byFingerprint]] first so identical docs
-    * (the main flood source) collapse before any signature work.
+    * [[graft.tools.AbMinhash]]). Callers that run actions over the
+    * pairs AND re-read their input (the clustered dedup variants,
+    * leakage-safe splits) pass the input through [[Lineage.once]]
+    * so an expensive upstream chain runs once — and at petabyte
+    * scale run [[byFingerprint]] first so identical docs (the main
+    * flood source) collapse before any signature work.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleK: Int = 5, numHashes: Int = 64,
@@ -439,15 +441,18 @@ object Dedup {
     * semantics real training-data dedup expects — a transitive chain
     * A~B~C collapses to ONE survivor (min id of the component), where
     * greedy keep-first ([[byMinhash]]) is order-dependent and
-    * non-transitive. */
+    * non-transitive. The component rounds are eager jobs over the
+    * input, and the result re-reads it: both read one
+    * [[Lineage.once]] frame. */
   def byMinhashClustered(df: DataFrame, idCol: String, textCol: String,
                          threshold: Double = 0.8, shingleK: Int = 5,
                          numHashes: Int = 64, bands: Int = 16,
                          maxBucket: Int = 1000): DataFrame = {
-    val pairs = clusteredCandidatePairs(df, idCol, textCol, threshold,
+    val src = Lineage.once(df)
+    val pairs = clusteredCandidatePairs(src, idCol, textCol, threshold,
       shingleK, numHashes, bands, maxBucket)
-    val clusters = clusterPairs(df.select(col(idCol)), idCol, pairs)
-    df.join(clusters.filter(col(idCol) =!= col("cluster_id"))
+    val clusters = clusterPairs(src.select(col(idCol)), idCol, pairs)
+    src.join(clusters.filter(col(idCol) =!= col("cluster_id"))
         .select(col(idCol)), Seq(idCol), "left_anti")
   }
 
@@ -493,16 +498,19 @@ object Dedup {
 
   /** [[byMinhashClustered]] with quality-aware survivor choice: the
     * minhash-candidate component keeps its best-`scoreCol` member
-    * via [[keepBestPerCluster]]. */
+    * via [[keepBestPerCluster]], over one [[Lineage.once]] input as
+    * in [[byMinhashClustered]]. */
   def byMinhashClusteredBest(df: DataFrame, idCol: String, textCol: String,
                              scoreCol: String, threshold: Double = 0.8,
                              shingleK: Int = 5, numHashes: Int = 64,
                              bands: Int = 16,
-                             maxBucket: Int = 1000): DataFrame =
-    keepBestPerCluster(df, idCol,
-      clusteredCandidatePairs(df, idCol, textCol, threshold, shingleK,
+                             maxBucket: Int = 1000): DataFrame = {
+    val src = Lineage.once(df)
+    keepBestPerCluster(src, idCol,
+      clusteredCandidatePairs(src, idCol, textCol, threshold, shingleK,
         numHashes, bands, maxBucket),
       scoreCol)
+  }
 
   /** Deduplicate: drop every doc that has a candidate partner with a
     * smaller id and est_jaccard ≥ threshold (greedy, one pass — the

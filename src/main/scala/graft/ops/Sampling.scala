@@ -139,23 +139,19 @@ object Sampling {
     * single per-row filter with a broadcast-sized CASE on the source
     * column. No extra shuffle beyond the count.
     *
-    * NOTE the count is an EAGER action over the upstream plan: if
-    * this sits at the end of an expensive unpersisted chain (dedup,
-    * analysis), that chain executes once for the counts and again for
-    * the downstream sink. Pass `persistInput = true` to cache the
-    * input across both (the returned frame reads the cache; the
-    * caller owns the eventual `df.unpersist()` once the sink has
-    * run), or persist/checkpoint upstream yourself.
+    * The count is an EAGER action over the input, and the returned
+    * filter reads the input again: both go through one
+    * [[Lineage.once]] frame, so the upstream chain runs once for the
+    * counts and the downstream sink together.
     *
     * Input with no rows comes back as is (there is no mixture to
     * match); input with rows but no weighted source fails.
     */
   def mixToWeights(df: DataFrame, groupCol: String, keyCol: String,
-                   weights: Map[String, Double],
-                   persistInput: Boolean = false): DataFrame = {
+                   weights: Map[String, Double]): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be positive")
-    val src = if (persistInput) df.persist() else df
+    val src = Lineage.once(df)
     weightedTotals(src, groupCol, weights, count(lit(1)))
       .fold(src)(mixFilter(src, groupCol, keyCol, weights, _))
   }
@@ -193,11 +189,11 @@ object Sampling {
     * aggregation collected O(#sources), one broadcast-sized CASE
     * filter, no extra shuffle. Input with no rows comes back as is. */
   def mixToBudgetWeights(df: DataFrame, groupCol: String, keyCol: String,
-                         budgetCol: String, weights: Map[String, Double],
-                         persistInput: Boolean = false): DataFrame = {
+                         budgetCol: String,
+                         weights: Map[String, Double]): DataFrame = {
     require(weights.nonEmpty && weights.values.forall(_ > 0),
       "weights must be positive")
-    val src = if (persistInput) df.persist() else df
+    val src = Lineage.once(df)
     weightedTotals(src, groupCol, weights, sum(col(budgetCol).cast("long")))
       .fold(src)(mixFilter(src, groupCol, keyCol, weights, _))
   }
@@ -251,11 +247,10 @@ object Sampling {
   def mixByTemperature(df: DataFrame, groupCol: String, keyCol: String,
                        temperature: Double,
                        budgetCol: Option[String] = None,
-                       persistInput: Boolean = false,
                        maxGroups: Int = 10000): DataFrame = {
     require(temperature >= 1.0,
       s"temperature must be >= 1.0, got $temperature")
-    val src = if (persistInput) df.persist() else df
+    val src = Lineage.once(df)
     // unlike the weights-table variants (whose isin filter bounds the
     // group set by config), temperature derives weights from the
     // data's own groups — a mis-picked high-cardinality group column

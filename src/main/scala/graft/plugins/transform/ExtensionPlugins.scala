@@ -241,8 +241,11 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
                   graft.ops.Sampling.leakageSafeSplitByFingerprint(
                     df, keyCol, textCol, splits, outCol = outName)
                 case "minhash" =>
+                  // the component rounds are eager jobs over the
+                  // input the split re-reads: both read one copy
+                  val src = graft.ops.Lineage.once(df)
                   val pairs = graft.ops.Dedup.minhashCandidatePairs(
-                      df, keyCol, textCol,
+                      src, keyCol, textCol,
                       shingleK = num("shingle_k", 5).toInt,
                       numHashes = num("num_hashes", 64).toInt,
                       bands = num("bands", 16).toInt,
@@ -250,7 +253,7 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
                       overCap = "star")
                     .filter(col("est_jaccard") >= num("threshold", 0.8))
                     .select("id_a", "id_b")
-                  graft.ops.Sampling.leakageSafeSplit(df, keyCol,
+                  graft.ops.Sampling.leakageSafeSplit(src, keyCol,
                     pairs, splits, outCol = outName)
                 case other => throw new PluginExecutionError(
                   s"Unknown pair_method: '$other' " +

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -249,29 +249,27 @@ class OpsSpec extends AnyFunSuite {
     assert(err.getMessage.contains(">= 1.0"))
   }
 
-  test("mixToWeights persistInput runs the upstream plan once (count + sink)") {
+  test("mix sampling runs the upstream plan once (count + sink)") {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("mix-upstream")
     def upstream = spark.range(0, 100)
-      .map { i => acc.add(1); (i, if (i < 60) "a" else "b") }
-      .toDF("id", "src")
-
-    acc.reset()
-    val mixed = Sampling.mixToWeights(upstream, "src", "id",
-      Map("a" -> 0.5, "b" -> 0.5), persistInput = true)
-    assert(acc.value == 100L) // the eager count materialized the cache
-    mixed.count()             // sink action reads the cache
-    assert(acc.value == 100L,
-      s"sink re-executed the upstream plan (${acc.value / 100} runs)")
-    spark.catalog.clearCache() // release the test cache before phase 2
-
-    // default: count + sink each execute the plan (documented behavior)
-    acc.reset()
-    val plain = Sampling.mixToWeights(upstream, "src", "id",
-      Map("a" -> 0.5, "b" -> 0.5))
-    assert(acc.value == 100L)
-    plain.count()
-    assert(acc.value == 200L)
+      .map { i => acc.add(1); (i, if (i < 60) "a" else "b", i % 7) }
+      .toDF("id", "src", "n_tok")
+    val weights = Map("a" -> 0.5, "b" -> 0.5)
+    Seq[(String, DataFrame => DataFrame)](
+      "mixToWeights" -> (Sampling.mixToWeights(_, "src", "id", weights)),
+      "mixToBudgetWeights" ->
+        (Sampling.mixToBudgetWeights(_, "src", "id", "n_tok", weights)),
+      "mixByTemperature" ->
+        (Sampling.mixByTemperature(_, "src", "id", temperature = 2.0))
+    ).foreach { case (op, mix) =>
+      acc.reset()
+      val mixed = mix(upstream)
+      assert(acc.value == 100L, op) // the eager count computed the input
+      mixed.count()                 // sink action reads the stored copy
+      assert(acc.value == 100L,
+        s"$op: sink re-executed the upstream plan (${acc.value / 100} runs)")
+    }
   }
 
   test("clusterPairs: transitive chain collapses to one component/survivor") {
