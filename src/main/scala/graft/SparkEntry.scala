@@ -3346,7 +3346,7 @@ object SparkEntry {
     }),
 
     // ---- events: tumbling-window aggregation ---------------------
-    // ts arrives as raw nanoseconds (nanosAsLong, see Verify/Session);
+    // ts arrives as raw nanoseconds (nanosAsLong, see core.Session);
     // bucket to hour starts in epoch seconds.
     "events_window" -> ((s, dir) =>
       events(s, dir)

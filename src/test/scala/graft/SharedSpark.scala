@@ -3,18 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole forked test JVM (suites share it;
-  * per-suite sessions would pay ~8 s startup each). */
+  * per-suite sessions would pay ~8 s startup each). Built by the one
+  * session factory, on 4 cores with 4 shuffle partitions. */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = graft.core.Session.getOrCreate("graft-test", cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,0 +1,72 @@
+package graft.core
+
+import java.nio.file.{Path, Paths}
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
+import graft.cli.Main
+import graft.e2e.CheckMatchesRunSpec.{inputsPresent, stage}
+
+/** The one session factory sizes Spark's generated-class cache so that
+  * running the same pipeline again in one JVM reuses the classes its
+  * first run compiled instead of recompiling identical sources. */
+class SessionSpec extends AnyFunSuite {
+  implicit lazy val spark: SparkSession = SharedSpark.spark
+
+  /** Empties Spark's generated-class cache (a private field), so that
+    * the first run below compiles cold whatever earlier suites left. */
+  private def clearCodegenCache(): Unit = {
+    val getter = CodeGenerator.getClass.getDeclaredMethod("cache")
+    getter.setAccessible(true)
+    val cache = getter.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
+  test("the session's generated-class cache holds 1000 entries") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+  }
+
+  /** `examples/corpus_clean.toml` staged on the sf0.001 fixture. */
+  private lazy val corpusClean: Path = {
+    val cfg = stage(Paths.get("examples/corpus_clean.toml"))
+    val reg = Config.loadConfig(cfg).flatMap(Loader.loadPlugins(_, cfg))
+      .fold(e => fail(e.getMessage), identity)
+    assume(inputsPresent(reg), "sf0.001 fixture not present")
+    cfg
+  }
+
+  /** Runs the CLI on `args` with its output captured; it must exit 0. */
+  private def cli(args: String*): Unit = {
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(out)(Console.withErr(out)(Main.run(args.toArray)))
+    assert(code == 0, out.toString)
+  }
+
+  test("a CLI call keeps the running session's shuffle partitions and log level") {
+    cli("check", "-c", corpusClean.toString)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(LogManager.getRootLogger.getLevel == Level.ERROR)
+  }
+
+  test("a warm run compiles at most a fifth of the classes of the first") {
+    val cfg = corpusClean
+    // Spark counts one compilation-time sample per class it compiles,
+    // that is, per generated-class cache miss. A warm run still misses
+    // a few: AQE can number the whole-stage classes differently from
+    // one run to the next, and the number is part of the source.
+    clearCodegenCache()
+    val compiled = (1 to 3).map { _ =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      cli("run", "-c", cfg.toString)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    info(s"classes compiled per run: ${compiled.mkString(", ")}")
+    assert(compiled.head > 0, compiled)
+    assert(compiled.tail.forall(_ * 5 <= compiled.head), compiled)
+  }
+}

@@ -22,31 +22,13 @@ import graft.core.{Config, Loader, Pipeline, PluginRegistry}
   * Each example is staged in a fresh directory as its header says,
   * with its inputs pointed at the sf0.001 fixture. */
 class CheckMatchesRunSpec extends AnyFunSuite {
+  import CheckMatchesRunSpec.{inputsPresent, stage}
+
   implicit lazy val spark: SparkSession = SharedSpark.spark
 
   private val examples: Seq[Path] =
     Files.list(Paths.get("examples")).iterator().asScala
       .filter(_.toString.endsWith(".toml")).toSeq.sortBy(_.toString)
-
-  /** Copies `example` (and the plugin sources beside it) into a fresh
-    * directory, its sf0.01 inputs swapped for sf0.001 ones. */
-  private def stage(example: Path): Path = {
-    val dir = Files.createTempDirectory("checkrun")
-    val plugins = example.resolveSibling("plugins")
-    if (Files.isDirectory(plugins)) {
-      Files.createDirectories(dir.resolve("plugins"))
-      Files.list(plugins).iterator().asScala.foreach(p =>
-        Files.copy(p, dir.resolve("plugins").resolve(p.getFileName.toString)))
-    }
-    val cfg = dir.resolve(example.getFileName.toString)
-    Files.writeString(cfg,
-      Files.readString(example).replaceAll("/sf0\\.0+1/", "/sf0.001/"))
-    cfg
-  }
-
-  private def inputsPresent(reg: PluginRegistry): Boolean =
-    reg.inputs.forall(p => p.options.get("input_path")
-      .forall(path => Files.exists(p.resolvePath(path.toString))))
 
   /** Registries of the examples that load, with their staged configs. */
   private lazy val loaded: Seq[(String, Path, PluginRegistry)] =
@@ -117,4 +99,26 @@ class CheckMatchesRunSpec extends AnyFunSuite {
     assert(code == 0, out.toString)
     assert(!Files.exists(cfg.resolveSibling("out/ann_index")))
   }
+}
+
+object CheckMatchesRunSpec {
+  /** Copies `example` (and the plugin sources beside it) into a fresh
+    * directory, its sf0.01 inputs swapped for sf0.001 ones. */
+  def stage(example: Path): Path = {
+    val dir = Files.createTempDirectory("checkrun")
+    val plugins = example.resolveSibling("plugins")
+    if (Files.isDirectory(plugins)) {
+      Files.createDirectories(dir.resolve("plugins"))
+      Files.list(plugins).iterator().asScala.foreach(p =>
+        Files.copy(p, dir.resolve("plugins").resolve(p.getFileName.toString)))
+    }
+    val cfg = dir.resolve(example.getFileName.toString)
+    Files.writeString(cfg,
+      Files.readString(example).replaceAll("/sf0\\.0+1/", "/sf0.001/"))
+    cfg
+  }
+
+  def inputsPresent(reg: PluginRegistry): Boolean =
+    reg.inputs.forall(p => p.options.get("input_path")
+      .forall(path => Files.exists(p.resolvePath(path.toString))))
 }
