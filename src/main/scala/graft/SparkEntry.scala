@@ -4007,9 +4007,9 @@ object SparkEntry {
     // ---- connected components over a derived org graph -----------
     // Two-level star: every customer links to its nation's min
     // custkey, every nation hub to its region's min — so components
-    // are regions and min-label propagation needs exactly 2 hops.
-    // Exercises clusterPairs (checkpointed label propagation) under
-    // the oracle, which computes the fixpoint directly as the
+    // are regions. Exercises clusterPairs (default large-star/
+    // small-star contraction, stopping at the first star forest)
+    // under the oracle, which computes the fixpoint directly as the
     // per-region min.
     "q_components" -> ((s, dir) => {
       val cust = t(s, dir, "customer")

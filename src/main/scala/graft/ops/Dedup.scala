@@ -258,7 +258,8 @@ object Dedup {
     *    topology — including the high-diameter chains (crawl
     *    snapshots, versioned docs) that walk label propagation to its
     *    round bound and then silently split components. Each round is
-    *    two grouped-min shuffles over the (shrinking) edge set.
+    *    two grouped-min shuffles over the (shrinking) edge set, and
+    *    the loop stops at the first star forest.
     *  - `"labelprop"`: iterative min-label propagation — every node
     *    starts labeled with its own id; each round a node adopts the
     *    smallest label among itself and its neighbors. Rounds needed
@@ -267,27 +268,27 @@ object Dedup {
     *    shuffle, and as the cross-check for the default.
     *
     * Both paths `localCheckpoint` per round (lazily — the round's
-    * convergence-check job is the one that materializes the blocks,
-    * so each round costs ONE job), which truncates the analyzed
+    * convergence test is the action that materializes the blocks, so
+    * each round costs ONE action), which truncates the analyzed
     * LOGICAL plan to a stats-bearing `LogicalRDD` leaf. That matters
     * because the round's frame is referenced twice the next round:
     * with lineage intact the plan doubles per round, so a long run
     * would OOM the driver on plan bookkeeping alone. Superseded
-    * rounds unpersist; checkpoint blocks are reclaimed by the
-    * ContextCleaner. Convergence checks are driver-side SCALARS,
-    * never collected data.
+    * rounds' checkpoint blocks are reclaimed by the ContextCleaner.
+    * Convergence tests are driver-side SCALARS, never collected data.
     *
-    * Returns (idCol, cluster_id) for EVERY node (singletons keep
-    * their own id as cluster); cluster_id = minimum member id.
+    * Returns (idCol, cluster_id) for EVERY node, one row each
+    * (singletons keep their own id as cluster); cluster_id = minimum
+    * member id.
     */
   def clusterPairs(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                   maxIter: Int = 20, checkpointInterval: Int = 1,
+                   maxIter: Int = 20,
                    algorithm: String = "alternating"): DataFrame =
     algorithm match {
       case "alternating" =>
         alternatingComponents(nodes, idCol, pairs, maxIter)
       case "labelprop" =>
-        labelPropagation(nodes, idCol, pairs, maxIter, checkpointInterval)
+        labelPropagation(nodes, idCol, pairs, maxIter)
       case other => throw new IllegalArgumentException(
         s"unknown components algorithm '$other' " +
           "(expected 'alternating' or 'labelprop')")
@@ -306,14 +307,16 @@ object Dedup {
     *    re-attach `{u} ∪ N(u) \ {m}` to `m`. Flattens local minima
     *    into stars.
     *
-    * Convergence = the round was a no-op on the edge SET (count
-    * unchanged AND no row in `next` outside `prev` — both sides are
-    * distinct, so that is set equality); the SoCC'14 progress lemma
-    * guarantees any non-star edge set strictly shrinks a finite
-    * potential each round, so a no-op round IS the star-forest fixed
-    * point. `maxIter` still bounds the loop, but at O(log n) rounds
+    * Convergence = the edge set is a star forest ([[nonStarNodes]] is
+    * 0), tested once on the input edges and once per round by the
+    * action that materializes the round's checkpoint. A star forest
+    * is a fixed point of both steps, and the SoCC'14 progress lemma
+    * guarantees any other edge set strictly shrinks a finite
+    * potential each round, so the loop stops at the first star
+    * forest. `maxIter` still bounds the loop, but at O(log n) rounds
     * the default covers ~2^30 nodes; non-convergence stays a loud
-    * warning. */
+    * warning, and the read-out then takes the minimum `_lo` per node
+    * so every node keeps one row. */
   private def alternatingComponents(nodes: DataFrame, idCol: String,
                                     pairs: DataFrame, maxIter: Int): DataFrame = {
     val edges = pairs
@@ -325,11 +328,10 @@ object Dedup {
     // input, as in `check`) is the fixed point: no job to run
     val none = Similarity.provenMaxRows(edges).contains(0L)
     var e = if (none) edges
-      else edges.localCheckpoint(eager = false) // the count materializes it
-    var eCnt = if (none) 0L else e.count()
-    var converged = eCnt == 0L
+      else edges.localCheckpoint(eager = false) // the test materializes it
+    var nonStar = if (none) 0L else nonStarNodes(e)
     var round = 0
-    while (!converged && round < maxIter) {
+    while (nonStar > 0 && round < maxIter) {
       // large-star over the undirected adjacency
       val und = e.select(col("_hi").as("_u"), col("_lo").as("_v"))
         .union(e.select(col("_lo").as("_u"), col("_hi").as("_v")))
@@ -347,28 +349,43 @@ object Dedup {
         .filter(col("_n") =!= col("_m"))
         .select(col("_n").as("_hi"), col("_m").as("_lo"))
         .distinct()
-      // Lazy checkpoint: the count below is the job that computes the
-      // round, so its blocks are saved as a side effect — one job per
-      // round, and the next round plans against an O(1) LogicalRDD.
-      val next = small.localCheckpoint(eager = false)
-      val nCnt = next.count()
-      // set equality on two distinct sets: same size + next ⊆ prev
-      converged = nCnt == eCnt &&
-        next.join(e, Seq("_hi", "_lo"), "left_anti").isEmpty
-      e.unpersist(blocking = false)
-      e = next
-      eCnt = nCnt
+      // Lazy checkpoint: the star test below is the action that
+      // computes the round, so its blocks are saved as a side effect —
+      // one action per round, and the next round plans against an
+      // O(1) LogicalRDD.
+      e = small.localCheckpoint(eager = false)
+      nonStar = nonStarNodes(e)
       round += 1
     }
-    if (!converged)
+    val leaves = if (nonStar == 0L) e else {
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"alternatingComponents did not converge in $maxIter " +
-          "rounds: components may be split; raise maxIter " +
-          "(O(log n) rounds suffice for any topology)")
+          s"rounds ($nonStar nodes still outside a star): components " +
+          "may be split; raise maxIter (O(log n) rounds suffice for " +
+          "any topology)")
+      // a node may still be the _hi of several edges: one row each
+      e.groupBy("_hi").agg(min(col("_lo")).as("_lo"))
+    }
     nodes.select(col(idCol))
-      .join(e.select(col("_hi").as(idCol), col("_lo")), Seq(idCol), "left")
+      .join(leaves.select(col("_hi").as(idCol), col("_lo")), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("_lo"), col(idCol)).as("cluster_id"))
   }
+
+  /** Nodes of the oriented edge set `e` (`_hi > _lo`) that break the
+    * star-forest shape: the `_hi` of more than one edge, or both some
+    * edge's `_hi` and another's `_lo`. At 0 every `_hi` is a leaf with
+    * exactly one edge and every `_lo` a center, so each component is
+    * one star centered on its minimum. One aggregate (one shuffle
+    * keyed by node), and the action that materializes `e` when `e` is
+    * a lazy checkpoint. */
+  private def nonStarNodes(e: DataFrame): Long =
+    e.select(explode(array(
+        struct(col("_hi").as("_n"), lit(1).as("_h")),
+        struct(col("_lo").as("_n"), lit(0).as("_h")))).as("_x"))
+      .groupBy(col("_x._n"))
+      .agg(sum(col("_x._h")).as("_h"), count(lit(1)).as("_d"))
+      .filter(col("_h") > 1 || (col("_h") > 0 && col("_d") > col("_h")))
+      .count()
 
   /** Min-label propagation (see [[clusterPairs]]). The per-round
     * change count rides the SAME job that materializes the round's
@@ -376,17 +393,14 @@ object Dedup {
     * round's frame and aggregated off the saved blocks — not a
     * second join job over both label frames. */
   private def labelPropagation(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                               maxIter: Int, checkpointInterval: Int): DataFrame = {
-    require(checkpointInterval >= 1,
-      s"checkpointInterval must be >= 1, got $checkpointInterval")
+                               maxIter: Int): DataFrame = {
     val edges = pairs
       .select(col("id_a").as("_src"), col("id_b").as("_dst"))
       .union(pairs.select(col("id_b").as("_src"), col("id_a").as("_dst")))
       .persist()
-    var mat = nodes.select(col(idCol).as("_id"))
-      .withColumn("cluster_id", col("_id")).persist()
-    var labels = mat
-    var checkpointed = false
+    // round 1 reads the initial labels twice: compute them once
+    var labels = Lineage.once(nodes.select(col(idCol).as("_id"))
+      .withColumn("cluster_id", col("_id")))
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxIter) {
@@ -396,34 +410,17 @@ object Dedup {
         .withColumnRenamed("_src", "_id")
       val newLabel = least(col("cluster_id"),
         coalesce(col("_nbr_min"), col("cluster_id")))
-      val nextBase = labels
+      // lazy checkpoint: the change-count aggregate below is the
+      // materializing job
+      val next = labels
         .join(nbrMin, Seq("_id"), "left")
         .select(col("_id"), newLabel.as("cluster_id"),
           (newLabel =!= col("cluster_id")).as("_chg"))
-      // checkpoint on the cadence (default every round: truncating
-      // the plan is measured cheaper than re-planning a doubled
-      // tree); persist in between so the double labels reference
-      // never recomputes. Lazy in both cases: the change-count
-      // aggregate below is the materializing job.
-      val boundary = (round + 1) % checkpointInterval == 0
-      val next =
-        if (boundary) nextBase.localCheckpoint(eager = false)
-        else nextBase.persist()
+        .localCheckpoint(eager = false)
       changed = next.agg(sum(when(col("_chg"), 1L).otherwise(0L)))
         .head().getLong(0)
-      mat.unpersist(blocking = false) // no-op on checkpointed frames
-      mat = next
       labels = next.drop("_chg")
-      checkpointed = boundary
       round += 1
-    }
-    // Return a checkpoint-backed frame: O(1) plan for the caller and
-    // no dangling cache entry (reading from the still-live cache, the
-    // final truncation costs one cheap job).
-    if (!checkpointed) {
-      val flat = labels.localCheckpoint(eager = true)
-      mat.unpersist(blocking = false)
-      labels = flat
     }
     edges.unpersist()
     // exiting via maxIter with changes still in flight means some

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -78,6 +78,82 @@ class Round7Spec extends AnyFunSuite {
     val got = Dedup.clusterPairs(nodes, "id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  /** Union-find components of `nodes`, each labeled by its minimum
+    * member: the oracle for both components algorithms. */
+  private def unionFind[A](nodes: Seq[A], pairs: Seq[(A, A)])(
+      implicit ord: Ordering[A]): Map[A, A] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: A): A = if (parent(x) == x) x else find(parent(x))
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  /** Both algorithms return one row per node, equal to union-find. */
+  private def assertComponents[A: Ordering](what: String, nodes: Seq[A],
+      pairs: Seq[(A, A)], nodesDf: DataFrame, pairsDf: DataFrame): Unit = {
+    val expect: Map[Any, Any] = unionFind(nodes, pairs).toMap
+    Seq("alternating", "labelprop").foreach { algorithm =>
+      val got = Dedup.clusterPairs(nodesDf, "id", pairsDf,
+          algorithm = algorithm)
+        .collect().map(r => r.get(0) -> r.get(1)).toSeq
+      assert(got.size == nodes.size, s"$what/$algorithm: rows per node")
+      assert(got.toMap == expect, s"$what/$algorithm")
+    }
+  }
+
+  test("stopping rule: two leaves on one hi node are not a star") {
+    // no _lo is also a _hi, yet 5 is the _hi of two edges
+    val nodes = (0L to 6L).toSeq
+    val pairs = Seq((5L, 1L), (5L, 2L))
+    assertComponents("two-center star", nodes, pairs,
+      nodes.toDF("id"), pairs.toDF("id_a", "id_b"))
+  }
+
+  test("stopping rule: disjoint pairs are already a star forest") {
+    val nodes = (0L until 20L).toSeq
+    val pairs = (0L until 20L by 2).map(i =>
+      if (i % 4 == 0) (i, i + 1) else (i + 1, i))
+    assertComponents("disjoint pairs", nodes, pairs,
+      nodes.toDF("id"), pairs.toDF("id_a", "id_b"))
+  }
+
+  test("stopping rule: a star centered above its minimum contracts") {
+    val nodes = (0L to 9L).toSeq
+    val pairs = Seq((3L, 2L), (1L, 3L),          // center 3, min 1
+      (5L, 9L), (9L, 6L), (7L, 9L))              // center 9, min 5
+    assertComponents("star above its minimum", nodes, pairs,
+      nodes.toDF("id"), pairs.toDF("id_a", "id_b"))
+  }
+
+  test("stopping rule: string ids") {
+    val nodes = Seq("a", "m", "q", "x", "y", "z", "solo")
+    val pairs = Seq(("m", "a"), ("z", "m"), ("m", "q"), ("y", "x"))
+    assertComponents("string ids", nodes, pairs,
+      nodes.toDF("id"), pairs.toDF("id_a", "id_b"))
+  }
+
+  test("clusterPairs stopped at maxIter still returns one row per node") {
+    val n = 40
+    Seq(1L, 2L, 3L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val pairs = Seq.fill(60)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val nodes = (0L until n.toLong).toSeq
+      val got = Dedup.clusterPairs(nodes.toDF("id"), "id",
+          pairs.toDF("id_a", "id_b"), maxIter = 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(got.size == n, s"seed $seed: ${got.size} rows for $n nodes")
+      assert(got.map(_._1).toSet == nodes.toSet, s"seed $seed")
+      // an unconverged label is still a smaller member of the component
+      val comp = unionFind(nodes, pairs)
+      got.foreach { case (id, label) =>
+        assert(label <= id && comp(label) == comp(id), s"seed $seed: $id")
+      }
+    }
   }
 
   // ------------------------------------------- SQL view isolation
