@@ -42,40 +42,6 @@ object Pipeline {
       }
     }
 
-  /** A12 — output fan-out: every sink receives the SAME transformed
-    * frame; stop on first failure (pipeline.py:120-140). Each sink is
-    * its own Spark action; with `persistMultiOutput` (the DEFAULT
-    * since round 10) a >1-sink fan-out caches the frame so the
-    * upstream plan runs ONCE — at 100 TB, re-executing a dedup chain
-    * per sink costs hours where the cache costs one spillable copy of
-    * its OUTPUT. Pass `persistMultiOutput=false` for the reference's
-    * recompute-per-sink behavior (Polars re-optimizes per `sink_*`
-    * call), e.g. when the output is larger than the compute that
-    * produced it. Results are identical either way.
-    */
-  def executeOutput(data: Either[Throwable, DataFrame],
-                    outputs: Seq[OutputPlugin],
-                    persistMultiOutput: Boolean = true): Either[Throwable, Unit] = {
-    // never persist a STREAMING frame: Dataset.persist on one throws
-    // (streaming queries execute via writeStream, each sink is its
-    // own query) — multi-sink streaming labels keep per-sink
-    // execution regardless of the flag
-    val frame =
-      if (persistMultiOutput && outputs.size > 1)
-        data.map(df => if (df.isStreaming) df else df.persist())
-      else data
-    val result = outputs.zipWithIndex.foldLeft(frame.map(_ => ())) {
-      case (acc, (p, i)) =>
-        acc.flatMap { _ =>
-          log.info(s"[${i + 1}/${outputs.size}] Executing output: ${p.name}")
-          frame.flatMap(p.execute)
-        }
-    }
-    if (persistMultiOutput && outputs.size > 1)
-      frame.foreach(df => Errors.safe(df.unpersist()))
-    result
-  }
-
   /** A14 — labeled transform routing (pipeline.py:143-162), the ONE
     * fold behind both `run` (streams of DataFrames) and `check`
     * (streams of schemas): each transform applies to the stream
@@ -142,7 +108,9 @@ object Pipeline {
       }
     }
 
-  /** A15 for `run`.
+  /** A15 for `run`; also A12 (pipeline.py:120-140): every sink of a
+    * label receives the SAME frame, and the fan-out stops at the
+    * first failure.
     *
     * `persistMultiOutput` (DEFAULT since round 10) caches each stream
     * that MORE THAN ONE sink consumes, for the duration of the

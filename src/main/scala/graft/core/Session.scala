@@ -2,9 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession factory. The CLI, the test JVM, `graft.Bench`
-  * and `graft.Verify` all build through [[getOrCreate]]; a caller
-  * picks only the app name and the local core count. */
+/** The one SparkSession factory. The CLI, the test JVM, `graft.Bench`,
+  * `graft.Verify` and every `graft.tools` main build through
+  * [[getOrCreate]]; a caller picks only the app name and the local
+  * core count. */
 object Session {
 
   /** graft's session settings, each with the reason it is set.

@@ -125,13 +125,14 @@ object Dedup {
     * shuffle exchanges are collapsed at runtime by AQE's
     * ReuseExchange, and the one-hash affine kernel makes any
     * remaining recompute ~0.1 s per million docs per core — pair
-    * volume, not signature passes, dominates (A/B evidence in
-    * [[graft.tools.AbMinhash]]). Callers that run actions over the
-    * pairs AND re-read their input (the clustered dedup variants,
-    * leakage-safe splits) pass the input through [[Lineage.once]]
-    * so an expensive upstream chain runs once — and at petabyte
-    * scale run [[byFingerprint]] first so identical docs (the main
-    * flood source) collapse before any signature work.
+    * volume, not signature passes, dominates (A/B at sf0.1: the
+    * re-attach joins 1.8 s vs a melt + group 2.8 s). Callers that
+    * run actions over the pairs AND re-read their input (the
+    * clustered dedup variants, leakage-safe splits) pass the input
+    * through [[Lineage.once]] so an expensive upstream chain runs
+    * once — and at petabyte scale run [[byFingerprint]] first so
+    * identical docs (the main flood source) collapse before any
+    * signature work.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             shingleK: Int = 5, numHashes: Int = 64,
@@ -144,7 +145,7 @@ object Dedup {
     // pass is ~0.1 s per million docs per core, while a melt spelling
     // pays a SortAggregate over 2×pairs wide array rows — and
     // candidate pairs outnumber docs on any near-dup-dense corpus
-    // (A/B'd in tools/AbMinhash: melt 2.8 s vs joins 1.8 s at sf0.1).
+    // (A/B'd at sf0.1: melt 2.8 s vs joins 1.8 s).
     // Non-broadcast pins (lying-estimate defense): the signature
     // tables are corpus-sized (numHashes longs per row) and a corpus
     // subtree with no shuffle boundary below the join (range-rooted

@@ -212,34 +212,6 @@ object Similarity {
     }
   }
 
-  /** Profiling seam (tools/ProfileIvfPhases): the approx candidate
-    * scan of [[ivfTopK]] up to but excluding topRerank/exactRerank,
-    * so the candidate-scan vs rerank-tail split is measurable. Not a
-    * query path. */
-  private[graft] def ivfApproxForProfile(corpus: DataFrame,
-      queries: DataFrame, idCol: String, embCol: String, nlist: Int,
-      nprobe: Int, queryIdOut: String = "query_id"): DataFrame = {
-    val c = withNormalized(
-      corpus.select(col(idCol).as("neighbor_id"), col(embCol).as("_e")),
-      "_e", "v_c").select(col("neighbor_id"), col("v_c"))
-    val q = withNormalized(
-      queries.select(col(idCol).as(queryIdOut), col(embCol).as("_e")),
-      "_e", "v_q").select(col(queryIdOut), col("v_q"))
-    val sample = trainingSample(c, "neighbor_id", "v_c")
-    val centroids = KMeansLite.fit(sample, nlist, iters = 25, seed = 42L)
-    import graft.expressions.NearestCentroids.nearest_centroids
-    val cAssigned = c.withColumn("list_id",
-      element_at(nearest_centroids(col("v_c"), centroids, 1), 1))
-    val qProbed = q.withColumn("list_id",
-      explode(nearest_centroids(col("v_q"), centroids, nprobe)))
-    if (sys.env.get("GRAFT_IVF_PROFILE_CODES").contains("1")) {
-      import graft.expressions.Int8Candidates._
-      cAssigned
-        .select(col("neighbor_id"), col("list_id"),
-          int8_code(col("v_c")).as("_q8"))
-    } else int8CandidateScan(cAssigned, qProbed, q, "list_id", queryIdOut)
-  }
-
   /** Candidate scan with the int8-compressed corpus payload: the
     * corpus side of the bucket/list join carries (id, key, D code
     * bytes + two doubles) — 8× less than fp64 vectors at D=64 — and

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -77,12 +77,7 @@ object AuditBroadcast {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.getOrCreate("graft-audit-broadcast", cores = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     // range-rooted corpora: the text repeats id-derived words so the

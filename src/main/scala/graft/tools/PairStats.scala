@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diagnostic: candidate-pair / bucket-occupancy statistics for every
@@ -31,14 +31,7 @@ object PairStats {
     val sections =
       if (args.length > 1) args.tail.toSet
       else Set("minhash", "winnow", "hamming", "knn")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Session.getOrCreate("graft-pair-stats")
     spark.sparkContext.setLogLevel("ERROR")
     lazy val docs = spark.read.parquet(s"${args(0)}/documents.parquet")
 

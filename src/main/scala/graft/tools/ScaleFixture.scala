@@ -38,14 +38,7 @@ object ScaleFixture {
     val Array(src, out, factorS) = args.take(3)
     val only = args.drop(3).toSet
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.getOrCreate("graft-scale-fixture")
     build(spark, src, out, factor, only)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time arbitrary SparkEntry/benchOnly queries warm (best of 2 after
   * a warmup pass), matching Bench methodology — the dev loop for
   * tuning one query without paying the full headline run.
@@ -11,16 +9,7 @@ object TimeQuery {
     require(args.length >= 2, "usage: TimeQuery <sfDir> <query> [query...]")
     val sfDir = args.head
     val names = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.getOrCreate("graft-time-query")
     val inventory = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
     // Each timed run carries its own host-health window (HostMeter):
     // the seconds column stays column 2 (scripts awk on it), the

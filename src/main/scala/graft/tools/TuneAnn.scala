@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -13,12 +13,7 @@ import graft.ops.Similarity
   */
 object TuneAnn {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.core.Session.getOrCreate("graft-tune-ann", cores = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val k = 5

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
@@ -11,11 +10,7 @@ import graft.ops.{Dedup, Similarity}
   * in a pipeline. */
 object TuneSemDeDup {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("tune-semdedup").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.getOrCreate("tune-semdedup", cores = 8)
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
       val norm = Similarity.withNormalized(e, "embedding", "v")

@@ -180,11 +180,11 @@ class PipelineSpec extends AnyFunSuite {
       }
       def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
     }
-    val ok = Pipeline.executeOutput(Right(frame(Seq(1))),
+    val ok = Pipeline.executeLabeledOutput(Map("default" -> Right(frame(Seq(1)))),
       Seq(sink("o1"), sink("o2")))
     assert(ok.isRight && seen == List("o1", "o2"))
     seen = Nil
-    val bad = Pipeline.executeOutput(Right(frame(Seq(1))),
+    val bad = Pipeline.executeLabeledOutput(Map("default" -> Right(frame(Seq(1)))),
       Seq(sink("o1", fail = true), sink("o2")))
     assert(bad.isLeft && seen == List("o1"))
   }
@@ -254,8 +254,5 @@ class PipelineSpec extends AnyFunSuite {
       Map("default" -> Right(streamDf)),
       Seq(sink("s1"), sink("s2"))).isRight)
     assert(seen == 2)
-    assert(Pipeline.executeOutput(Right(streamDf),
-      Seq(sink("s3"), sink("s4"))).isRight)
-    assert(seen == 4)
   }
 }

@@ -1,6 +1,8 @@
 package graft.core
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -12,7 +14,8 @@ import graft.SharedSpark
 import graft.cli.Main
 import graft.e2e.CheckMatchesRunSpec.{inputsPresent, stage}
 
-/** The one session factory sizes Spark's generated-class cache so that
+/** The one session factory is the only place the program builds a
+  * session, and it sizes Spark's generated-class cache so that
   * running the same pipeline again in one JVM reuses the classes its
   * first run compiled instead of recompiling identical sources. */
 class SessionSpec extends AnyFunSuite {
@@ -29,6 +32,18 @@ class SessionSpec extends AnyFunSuite {
 
   test("the session's generated-class cache holds 1000 entries") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+  }
+
+  test("only Session builds a SparkSession in the program sources") {
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val builders =
+      try walk.iterator().asScala
+        .filter(f => f.toString.endsWith(".scala") &&
+          Files.readString(f).contains("SparkSession.builder"))
+        .map(root.relativize(_).toString).toList
+      finally walk.close()
+    assert(builders == List("graft/core/Session.scala"), builders)
   }
 
   /** `examples/corpus_clean.toml` staged on the sf0.001 fixture. */
