@@ -107,10 +107,7 @@ object Main {
             try {
               if (cli.command == "run")
                 Pipeline.runPipeline(registry.inputs, registry.transforms,
-                  registry.outputs,
-                  // on unless explicitly disabled: forall, not exists
-                  persistMultiOutput = config.pipelineOptions
-                    .get("persist_multi_output").forall(_.toString.toBoolean)) match {
+                  registry.outputs, config.persistMultiOutput) match {
                   case Right(_) =>
                     println("[SUCCESS] Pipeline completed successfully"); 0
                   case Left(e) =>

@@ -37,7 +37,13 @@ final case class GraftConfig(
     // `[pipeline]` table; absent in every reference config, so parity
     // configs parse unchanged). Known keys: persist_multi_output
     // (default TRUE since round 10 — see docs/PLUGINS.md).
-    pipelineOptions: Map[String, Any] = Map.empty)
+    pipelineOptions: Map[String, Any] = Map.empty) {
+  /** `[pipeline] persist_multi_output`, on unless set false
+    * ([[Config.loadConfig]] has checked that it is a boolean). */
+  def persistMultiOutput: Boolean =
+    pipelineOptions.get("persist_multi_output")
+      .flatMap(OptionKind.boolean.parse).getOrElse(true)
+}
 
 object Config {
 
@@ -110,7 +116,12 @@ object Config {
         transformPlugins = pluginList("transform_plugins"),
         outputPlugins = pluginList("output_plugins"),
         pipelineOptions = tree.get("pipeline") match {
-          case Some(o: Map[_, _]) => o.asInstanceOf[Map[String, Any]]
+          case Some(o: Map[_, _]) =>
+            val opts = o.asInstanceOf[Map[String, Any]]
+            opts.get("persist_multi_output").filter(OptionKind.boolean.parse(_).isEmpty)
+              .foreach(v => throw new ConfigLoadError(
+                s"pipeline.persist_multi_output must be a boolean, got: $v"))
+            opts
           case Some(other) => throw new ConfigLoadError(
             s"pipeline must be a table, got: $other")
           case None => Map.empty

@@ -48,7 +48,8 @@ object Pipeline {
     * matching its label and sees every other stream as it stands at
     * that point; a missing label STORES a Left under that label (the
     * pipeline continues — note the asymmetry with output routing,
-    * which short-circuits).
+    * which short-circuits). Like every plugin call in the routing
+    * folds, a throw from the transform becomes its `Left`.
     */
   private def routeTransforms[V](
       streams: Map[String, Either[Throwable, V]],
@@ -60,7 +61,7 @@ object Pipeline {
         case Some(entry) =>
           acc.updated(p.label, entry.flatMap { v =>
             log.info(s"$verb transform: ${p.name} (label: ${p.label})")
-            step(p, v, acc)
+            Errors.safe(step(p, v, acc)).flatten
           })
         case None =>
           acc.updated(p.label, Left(new NoSuchElementException(
@@ -100,7 +101,7 @@ object Pipeline {
         streams.get(p.label) match {
           case Some(entry) =>
             log.info(s"$verb output: ${p.name} (label: ${p.label})")
-            entry.flatMap(sink(p, _))
+            entry.flatMap(v => Errors.safe(sink(p, v)).flatten)
           case None =>
             Left(new NoSuchElementException(
               s"No data with label '${p.label}' for output plugin '${p.name}'"))
@@ -167,7 +168,7 @@ object Pipeline {
       implicit spark: SparkSession): Either[Throwable, Unit] = {
     val dataMap: LabeledDataMap = inputs.map { p =>
       log.info(s"Executing input: ${p.name} (label: ${p.label})")
-      p.label -> p.execute()
+      p.label -> Errors.safe(p.execute()).flatten
     }.toMap
     val transformed = executeLabeledTransformChain(dataMap, transforms)
     executeLabeledOutput(transformed, outputs, persistMultiOutput)
@@ -187,7 +188,7 @@ object Pipeline {
       implicit spark: SparkSession): Either[Throwable, StructType] = {
     val schemaMap: LabeledSchemaMap = inputs.map { p =>
       log.info(s"Dry-running input: ${p.name} (label: ${p.label})")
-      p.label -> p.dryRun()
+      p.label -> Errors.safe(p.dryRun()).flatten
     }.toMap
     dryRunLabeledOutput(dryRunLabeledTransformChain(schemaMap, transforms), outputs)
   }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.core.{Errors, InputPlugin, PluginExecutionError}
+import graft.core.{Errors, InputPlugin}
 
 /** Shared option plumbing for file-based sources. */
 abstract class FileInputPlugin(val options: Map[String, Any],
@@ -16,15 +16,11 @@ abstract class FileInputPlugin(val options: Map[String, Any],
   /** Resolve the required `input_path` option; reference message parity
     * (/root/reference/.../input/parquet_scan.py:27-32). */
   protected def inputPath(): Either[Throwable, Path] =
-    options.get("input_path") match {
-      case None =>
-        Left(new PluginExecutionError("Option 'input_path' is required"))
-      case Some(p) =>
-        val resolved = resolvePath(p.toString)
-        if (!Files.exists(resolved))
-          Left(new java.io.FileNotFoundException(
-            s"Input file not found: $resolved"))
-        else Right(resolved)
+    requiredString("input_path").map(resolvePath).flatMap { resolved =>
+      if (!Files.exists(resolved))
+        Left(new java.io.FileNotFoundException(
+          s"Input file not found: $resolved"))
+      else Right(resolved)
     }
 }
 
@@ -43,11 +39,6 @@ class ParquetScanPlugin(options: Map[String, Any], configDir: Path, label: Strin
 
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(spark.read.parquet(p.toString)))
-
-  /** Footer-only schema read: no row is read, but Spark's parquet
-    * schema inference submits one footer-reading job. */
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    inputPath().flatMap(p => Errors.safe(spark.read.parquet(p.toString).schema))
 }
 
 /** A3 — CSV source with schema inference
@@ -59,15 +50,12 @@ class CsvScanPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   private def reader(spark: SparkSession) =
     spark.read
-      .option("header", options.get("has_header").forall(_.toString.toBoolean))
-      .option("sep", options.get("separator").map(_.toString).getOrElse(","))
+      .option("header", flag("has_header", true))
+      .option("sep", str("separator", ","))
       .option("inferSchema", true)
 
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(reader(spark).csv(p.toString)))
-
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    inputPath().flatMap(p => Errors.safe(reader(spark).csv(p.toString).schema))
 }
 
 /** JSONL source (newline-delimited JSON — the interchange format of
@@ -81,21 +69,12 @@ class JsonScanPlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "json_scan"
 
   private def reader(spark: SparkSession) = {
-    val base = spark.read
-      .option("multiLine",
-        options.get("multiline").exists(_.toString.toBoolean))
-    options.get("schema_ddl") match {
-      case Some(ddl) => base.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl.toString))
-      case None => base
-    }
+    val base = spark.read.option("multiLine", flag("multiline", false))
+    str("schema_ddl").fold(base)(ddl => base.schema(StructType.fromDDL(ddl)))
   }
 
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(reader(spark).json(p.toString)))
-
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    inputPath().flatMap(p => Errors.safe(reader(spark).json(p.toString).schema))
 }
 
 /** ORC source (beyond-reference, same tier as `json_scan`): the other
@@ -109,10 +88,6 @@ class OrcScanPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(spark.read.orc(p.toString)))
-
-  /** Footer-only schema read; no Spark job touches row data. */
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    inputPath().flatMap(p => Errors.safe(spark.read.orc(p.toString).schema))
 }
 
 /** A4 — Arrow IPC (Feather) source
@@ -132,13 +107,6 @@ class IpcScanPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(
       spark.read.format("arrow-ipc").load(p.toString)))
-
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    // same path resolution as execution (file OR directory of IPC
-    // files), so dry-run accepts exactly what the run accepts
-    inputPath().flatMap(p => Errors.safe(ArrowIpc.readSchema(
-      java.nio.file.Paths.get(
-        graft.sources.ArrowIpcSource.resolvePaths(p.toString).head))))
 }
 
 /** Arrow IPC ⇄ Spark bridge used by [[IpcScanPlugin]] and the IPC
@@ -389,13 +357,7 @@ class SnapshotScanPlugin(options: Map[String, Any], configDir: Path, label: Stri
     extends FileInputPlugin(options, configDir, label) {
   def name: String = "snapshot_scan"
 
-  private def versionOpt: Int =
-    options.get("version").map(_.toString.toDouble.toInt).getOrElse(-1)
-
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
     inputPath().flatMap(p => Errors.safe(
-      graft.sources.Snapshots.read(spark, p.toString, versionOpt)))
-
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    execute().map(_.schema)
+      graft.sources.Snapshots.read(spark, p.toString, int("version", -1))))
 }

@@ -3,6 +3,7 @@ package graft.plugins.output
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 import graft.core.{Errors, OutputPlugin, PluginExecutionError}
@@ -16,11 +17,7 @@ abstract class FileOutputPlugin(val options: Map[String, Any],
     extends OutputPlugin {
 
   protected def outputPath(): Either[Throwable, Path] =
-    options.get("output_path") match {
-      case None =>
-        Left(new PluginExecutionError("Option 'output_path' is required"))
-      case Some(p) => Right(resolvePath(p.toString))
-    }
+    requiredString("output_path").map(resolvePath)
 
   /** `mkdir -p` the parent, like parquet_writer.py:38-40. */
   protected def ensureParent(path: Path): Unit = {
@@ -45,10 +42,9 @@ abstract class FileOutputPlugin(val options: Map[String, Any],
     * task writes its partition in parallel. `single_file = true` opts
     * into reference-style one-file output via coalesce(1) (small
     * results only; it serializes the final write). */
-  protected def singleFile: Boolean =
-    options.get("single_file").exists(_.toString.toBoolean)
+  protected def singleFile: Boolean = flag("single_file", false)
 
-  protected def mode: String = optStringOr("mode", "overwrite")
+  protected def mode: String = str("mode", "overwrite")
 }
 
 /** A7/A8 — Parquet sink: THE action that triggers the whole lazy plan,
@@ -71,18 +67,9 @@ class ParquetWriterPlugin(options: Map[String, Any], configDir: Path, label: Str
         // layout shuffle (range partition on the code), so it replaces
         // repartition_by/sort_within_partitions rather than stacking
         // a second exchange on top.
-        val sized0 = options.get("cluster_by") match {
-          case Some(by) =>
-            val cols = by match {
-              case xs: Seq[_] => xs.map(_.toString)
-              case s => Seq(s.toString)
-            }
-            val bits = options.get("cluster_bits").map(_.toString.toInt).getOrElse(8)
-            val files = options.get("cluster_files").map(_.toString.toInt).getOrElse(0)
-            val curve = options.getOrElse("cluster_curve", "z").toString
-            graft.ops.ZOrder.clustered(sized00, cols, bits, files, curve)
-          case None => sized00
-        }
+        val sized0 = strs("cluster_by").fold(sized00)(cols =>
+          graft.ops.ZOrder.clustered(sized00, cols, int("cluster_bits", 8),
+            int("cluster_files", 0), str("cluster_curve", "z")))
         // cluster_by IS the layout shuffle: stacking repartition_by /
         // sort_within_partitions on top would silently destroy the
         // Z-order the previous exchange just paid for — ignore them
@@ -100,56 +87,35 @@ class ParquetWriterPlugin(options: Map[String, Any], configDir: Path, label: Str
         // it, each partition's rows land in few tasks. The one
         // shuffle this adds is usually the cheapest part of a big
         // partitioned write.
-        val sized = (if (clusterWins) None else options.get("repartition_by")) match {
-          case Some(xs: Seq[_]) => sized0.repartition(
-            xs.map(x => org.apache.spark.sql.functions.col(x.toString)): _*)
-          case Some(s) => sized0.repartition(
-            org.apache.spark.sql.functions.col(s.toString))
-          case None => sized0
-        }
+        val sized = (if (clusterWins) None else strs("repartition_by"))
+          .fold(sized0)(cs => sized0.repartition(cs.map(col): _*))
         // Row-group clustering: sorting within partitions tightens
         // parquet min/max column stats so readers prune row groups —
         // the cheap (no-shuffle) half of write-time data layout.
-        val out = (if (clusterWins) None
-                   else options.get("sort_within_partitions")) match {
-          case Some(xs: Seq[_]) =>
-            sized.sortWithinPartitions(xs.map(_.toString).map(
-              org.apache.spark.sql.functions.col): _*)
-          case Some(s) => sized.sortWithinPartitions(s.toString)
-          case None => sized
-        }
+        val out = (if (clusterWins) None else strs("sort_within_partitions"))
+          .fold(sized)(cs => sized.sortWithinPartitions(cs.map(col): _*))
         var writer = out.write.mode(mode)
         // zstd trades ~10% write CPU for ~30% smaller files than the
         // snappy default — usually the right call at 100 TB.
-        options.get("compression").foreach(c =>
-          writer = writer.option("compression", c.toString))
+        str("compression").foreach(c => writer = writer.option("compression", c))
         // Bound output file sizes (splittable units for downstream
         // readers) without a repartition shuffle.
-        options.get("max_records_per_file").foreach(n =>
-          writer = writer.option("maxRecordsPerFile",
-            n.toString.toDouble.toLong.toString))
+        long("max_records_per_file").foreach(n =>
+          writer = writer.option("maxRecordsPerFile", n))
         // Data-lake layout at scale: hive-style partition directories
         // enable partition pruning on read (scan only matching dirs).
-        options.get("partition_by").foreach {
-          case xs: Seq[_] => writer = writer.partitionBy(xs.map(_.toString): _*)
-          case s => writer = writer.partitionBy(s.toString)
-        }
+        strs("partition_by").foreach(cs => writer = writer.partitionBy(cs: _*))
         // Bucketed tables: co-locate join/agg keys at WRITE time so
         // repeated joins on the bucket key run with NO shuffle on
         // either side (bucket-aware scan). Requires a catalog table
         // (`table` option); data still lands under output_path.
-        (options.get("bucket_by"), options.get("table")) match {
-          case (Some(by), Some(tbl)) =>
-            val cols = by match {
-              case xs: Seq[_] => xs.map(_.toString)
-              case s => Seq(s.toString)
-            }
-            val n = options.get("buckets").map(_.toString.toInt).getOrElse(16)
+        (strs("bucket_by"), str("table")) match {
+          case (Some(cols), Some(tbl)) =>
             writer
-              .bucketBy(n, cols.head, cols.tail: _*)
+              .bucketBy(int("buckets", 16), cols.head, cols.tail: _*)
               .sortBy(cols.head, cols.tail: _*)
               .option("path", p.toString)
-              .saveAsTable(tbl.toString)
+              .saveAsTable(tbl)
           case _ =>
             writer.parquet(p.toString)
         }
@@ -169,8 +135,8 @@ class CsvWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
         ensureParent(p)
         val out = if (singleFile) df.coalesce(1) else df
         out.write.mode(mode)
-          .option("header", options.get("has_header").forall(_.toString.toBoolean))
-          .option("sep", options.get("separator").map(_.toString).getOrElse(","))
+          .option("header", flag("has_header", true))
+          .option("sep", str("separator", ","))
           .csv(p.toString)
       }
     }
@@ -191,8 +157,7 @@ class JsonWriterPlugin(options: Map[String, Any], configDir: Path, label: String
         ensureParent(p)
         val out = if (singleFile) df.coalesce(1) else df
         var writer = out.write.mode(mode)
-        options.get("compression").foreach(c =>
-          writer = writer.option("compression", c.toString))
+        str("compression").foreach(c => writer = writer.option("compression", c))
         writer.json(p.toString)
       }
     }
@@ -211,8 +176,7 @@ class OrcWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
         ensureParent(p)
         val out = if (singleFile) df.coalesce(1) else df
         var writer = out.write.mode(mode)
-        options.get("compression").foreach(c =>
-          writer = writer.option("compression", c.toString))
+        str("compression").foreach(c => writer = writer.option("compression", c))
         writer.orc(p.toString)
       }
     }
@@ -239,14 +203,11 @@ class IpcWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
     outputPath().flatMap { p =>
       Errors.safe {
         ensureParent(p)
-        var writer = df.write.format("arrow-ipc")
-        options.get("batch_rows").foreach(n =>
-          writer = writer.option("batch_rows", n.toString))
+        val batchRows = int("batch_rows").map(n => "batch_rows" -> n.toString).toMap
         if (singleFile) {
           val staging = p.resolveSibling(p.getFileName.toString + ".staging")
           df.coalesce(1).write.format("arrow-ipc").mode("overwrite")
-            .options(options.get("batch_rows")
-              .map(n => Map("batch_rows" -> n.toString)).getOrElse(Map.empty))
+            .options(batchRows)
             .save(staging.toString)
           val parts = graft.sources.ArrowIpcSource.resolvePaths(staging.toString)
           require(parts.size == 1,
@@ -256,7 +217,7 @@ class IpcWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           Files.delete(staging)
         } else {
-          writer.mode(mode).save(p.toString)
+          df.write.format("arrow-ipc").options(batchRows).mode(mode).save(p.toString)
         }
       }
     }

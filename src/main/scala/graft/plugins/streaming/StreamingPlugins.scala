@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.core.{Errors, InputPlugin, OutputPlugin, PluginExecutionError}
+import graft.core.{Errors, PluginExecutionError, SchemaValidationError}
+import graft.plugins.input.FileInputPlugin
+import graft.plugins.output.FileOutputPlugin
 
 /** Streaming face of the pipeline: the SAME config format and the
   * SAME transform plugins, with streaming sources/sinks. A streaming
@@ -21,83 +23,62 @@ import graft.core.{Errors, InputPlugin, OutputPlugin, PluginExecutionError}
   * pipeline. Re-running the same config picks up only NEW files via
   * the checkpoint: incremental ingestion from a config file.
   */
-class ParquetStreamScanPlugin(val options: Map[String, Any],
-                              val configDir: Path,
-                              override val label: String)
-    extends InputPlugin {
+class ParquetStreamScanPlugin(options: Map[String, Any], configDir: Path, label: String)
+    extends FileInputPlugin(options, configDir, label) {
   def name: String = "parquet_stream_scan"
 
-  private def inputPath(): Either[Throwable, Path] =
-    options.get("input_path") match {
-      case None => Left(new PluginExecutionError("Option 'input_path' is required"))
-      case Some(p) =>
-        val resolved = resolvePath(p.toString)
-        if (!Files.isDirectory(resolved))
-          Left(new PluginExecutionError(
-            s"Streaming input must be a directory of files: $resolved"))
-        else Right(resolved)
-    }
+  private def directory(): Either[Throwable, Path] =
+    inputPath().flatMap(p =>
+      if (Files.isDirectory(p)) Right(p)
+      else Left(new PluginExecutionError(
+        s"Streaming input must be a directory of files: $p")))
 
   def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
-    inputPath().flatMap { p =>
+    directory().flatMap { p =>
       Errors.safe {
         // schema from the current files' footers (required by readStream)
         val schema = spark.read.parquet(p.toString).schema
         val reader = spark.readStream.schema(schema)
         // bound per-micro-batch work on a flooded landing dir
         // (backfill catch-up) — the standard ingestion rate limit
-        val limited = options.get("max_files_per_trigger")
-          .map(v => reader.option("maxFilesPerTrigger",
-            v.toString.toDouble.toInt.toString))
-          .getOrElse(reader)
-        limited.parquet(p.toString)
+        int("max_files_per_trigger")
+          .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
+          .parquet(p.toString)
       }
     }
+}
 
-  def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
-    inputPath().flatMap(p => Errors.safe(spark.read.parquet(p.toString).schema))
+/** Where a streaming sink keeps its offsets: `checkpoint` resolved
+  * against the config dir, else `<output_path>_checkpoint`. */
+abstract class StreamingFileOutputPlugin(options: Map[String, Any], configDir: Path,
+                                         label: String)
+    extends FileOutputPlugin(options, configDir, label) {
+  protected def checkpoint(p: Path): String =
+    str("checkpoint").fold(p.toString + "_checkpoint")(c => resolvePath(c).toString)
+
+  protected def requireStreaming(df: DataFrame): Unit =
+    if (!df.isStreaming)
+      throw new PluginExecutionError(
+        s"$name requires a streaming input (use parquet_stream_scan)")
 }
 
 /** Streaming parquet sink with checkpointed exactly-once semantics. */
-class StreamParquetWriterPlugin(val options: Map[String, Any],
-                                val configDir: Path,
-                                override val label: String)
-    extends OutputPlugin {
+class StreamParquetWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
+    extends StreamingFileOutputPlugin(options, configDir, label) {
   def name: String = "stream_parquet_writer"
-
-  private def outputPath(): Either[Throwable, Path] =
-    options.get("output_path") match {
-      case None => Left(new PluginExecutionError("Option 'output_path' is required"))
-      case Some(p) => Right(resolvePath(p.toString))
-    }
 
   def execute(df: DataFrame): Either[Throwable, Unit] =
     outputPath().flatMap { p =>
       Errors.safe {
-        if (!df.isStreaming)
-          throw new PluginExecutionError(
-            s"$name requires a streaming input (use parquet_stream_scan)")
-        val checkpoint = options.get("checkpoint")
-          .map(c => resolvePath(c.toString).toString)
-          .getOrElse(p.toString + "_checkpoint")
-        val mode = options.get("output_mode").map(_.toString).getOrElse("append")
+        requireStreaming(df)
         val q = df.writeStream
           .format("parquet")
           .option("path", p.toString)
-          .option("checkpointLocation", checkpoint)
-          .outputMode(mode)
+          .option("checkpointLocation", checkpoint(p))
+          .outputMode(str("output_mode", "append"))
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-      }
-    }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    outputPath().flatMap { p =>
-      Errors.safe {
-        val parent = p.toAbsolutePath.getParent
-        if (parent != null) Files.createDirectories(parent)
-        schema
       }
     }
 }
@@ -109,25 +90,9 @@ class StreamParquetWriterPlugin(val options: Map[String, Any],
   * foreachBatch's at-least-once replays. Options: output_path (req —
   * the state table), key_columns, order_columns (req, lists),
   * checkpoint (default `<output>_checkpoint`). */
-class StreamUpsertWriterPlugin(val options: Map[String, Any],
-                               val configDir: Path,
-                               override val label: String)
-    extends OutputPlugin {
+class StreamUpsertWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
+    extends StreamingFileOutputPlugin(options, configDir, label) {
   def name: String = "stream_upsert_writer"
-
-  private def outputPath(): Either[Throwable, Path] =
-    options.get("output_path") match {
-      case None => Left(new PluginExecutionError("Option 'output_path' is required"))
-      case Some(p) => Right(resolvePath(p.toString))
-    }
-
-  private def stringList(key: String): Either[Throwable, Seq[String]] =
-    options.get(key) match {
-      case Some(xs: Seq[_]) => Right(xs.map(_.toString))
-      case Some(s) => Right(Seq(s.toString))
-      case None => Left(new PluginExecutionError(
-        s"Option '$key' is required"))
-    }
 
   def execute(df: DataFrame): Either[Throwable, Unit] =
     for {
@@ -135,30 +100,20 @@ class StreamUpsertWriterPlugin(val options: Map[String, Any],
       keys <- stringList("key_columns")
       order <- stringList("order_columns")
       _ <- Errors.safe {
-        if (!df.isStreaming)
-          throw new PluginExecutionError(
-            s"$name requires a streaming input (use parquet_stream_scan)")
-        val checkpoint = options.get("checkpoint")
-          .map(c => resolvePath(c.toString).toString)
-          .getOrElse(p.toString + "_checkpoint")
+        requireStreaming(df)
         graft.streaming.Streams.upsertLatest(df, keys, order,
-          p.toString, checkpoint)
+          p.toString, checkpoint(p))
       }
     } yield ()
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
-      p <- outputPath()
       keys <- stringList("key_columns")
       order <- stringList("order_columns")
-      out <- (keys ++ order).find(c => !schema.fieldNames.contains(c))
-        .map(c => Left(new graft.core.SchemaValidationError(
-          s"Column '$c' not found in schema")): Either[Throwable, StructType])
-        .getOrElse(Errors.safe {
-          val parent = p.toAbsolutePath.getParent
-          if (parent != null) Files.createDirectories(parent)
-          schema
-        })
+      _ <- (keys ++ order).find(c => !schema.fieldNames.contains(c))
+        .map(c => Left(new SchemaValidationError(s"Column '$c' not found in schema")))
+        .getOrElse(Right(()))
+      out <- super.dryRun(schema)
     } yield out
 }
 
@@ -170,40 +125,23 @@ class StreamUpsertWriterPlugin(val options: Map[String, Any],
   * version stays readable via `snapshot_scan` while new batches land.
   * Options: output_path (req — the snapshot directory), checkpoint
   * (default <output_path>_checkpoint). */
-class StreamSnapshotWriterPlugin(val options: Map[String, Any],
-                                 val configDir: Path,
-                                 override val label: String)
-    extends OutputPlugin {
+class StreamSnapshotWriterPlugin(options: Map[String, Any], configDir: Path, label: String)
+    extends StreamingFileOutputPlugin(options, configDir, label) {
   def name: String = "stream_snapshot_writer"
-
-  private def outputPath(): Either[Throwable, Path] =
-    options.get("output_path") match {
-      case None => Left(new PluginExecutionError("Option 'output_path' is required"))
-      case Some(p) => Right(resolvePath(p.toString))
-    }
 
   def execute(df: DataFrame): Either[Throwable, Unit] =
     outputPath().flatMap { p =>
       Errors.safe {
-        if (!df.isStreaming)
-          throw new PluginExecutionError(
-            s"$name requires a streaming input (use parquet_stream_scan)")
-        val checkpoint = options.get("checkpoint")
-          .map(c => resolvePath(c.toString).toString)
-          .getOrElse(p.toString + "_checkpoint")
+        requireStreaming(df)
         val q = df.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             graft.sources.Snapshots.writeBatch(batch, p.toString, batchId)
             ()
           }
-          .option("checkpointLocation", checkpoint)
+          .option("checkpointLocation", checkpoint(p))
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
       }
     }
-
-  def dryRun(schema: org.apache.spark.sql.types.StructType)
-      : Either[Throwable, org.apache.spark.sql.types.StructType] =
-    outputPath().map(_ => schema)
 }

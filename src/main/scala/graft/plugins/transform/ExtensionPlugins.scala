@@ -5,7 +5,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-import graft.core.{PluginExecutionError, SchemaValidationError}
+import graft.core.{OptionKind, PluginExecutionError, SchemaValidationError}
 import graft.ops.{Dedup, Text}
 
 /** Config-driven wrapper over the [[graft.ops.Dedup]] family, so
@@ -28,150 +28,124 @@ class DedupPlugin(options: Map[String, Any], configDir: Path, label: String)
       method <- requiredString("method")
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe {
+        val textColumn = str("text_column", "text")
         method match {
           case "ngram_verified" =>
             Dedup.ngramJaccardVerified(df, idCol, textColumn,
-              n = numOpt("n", 5).toInt,
-              threshold = numOpt("threshold", 0.8),
-              numHashes = numOpt("num_hashes", 64).toInt,
-              bands = numOpt("bands", 16).toInt)
+              n = int("n", 5),
+              threshold = num("threshold", 0.8),
+              numHashes = int("num_hashes", 64),
+              bands = int("bands", 16))
           case "minhash_clustered" =>
             Dedup.byMinhashClustered(df, idCol, textColumn,
-              threshold = numOpt("threshold", 0.8),
-              shingleK = numOpt("shingle_k", 5).toInt,
-              numHashes = numOpt("num_hashes", 64).toInt,
-              bands = numOpt("bands", 16).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+              threshold = num("threshold", 0.8),
+              shingleK = int("shingle_k", 5),
+              numHashes = int("num_hashes", 64),
+              bands = int("bands", 16),
+              maxBucket = int("max_bucket", 1000))
           case "minhash_clustered_best" =>
             // quality-aware survivor: keep each component's best
             // score_column member instead of its min id
-            val sc = options.getOrElse("score_column",
-              throw new PluginExecutionError(
-                "Option 'score_column' is required for method " +
-                  "'minhash_clustered_best'")).toString
-            Dedup.byMinhashClusteredBest(df, idCol, textColumn, sc,
-              threshold = numOpt("threshold", 0.8),
-              shingleK = numOpt("shingle_k", 5).toInt,
-              numHashes = numOpt("num_hashes", 64).toInt,
-              bands = numOpt("bands", 16).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+            Dedup.byMinhashClusteredBest(df, idCol, textColumn,
+              requiredString("score_column").toTry.get,
+              threshold = num("threshold", 0.8),
+              shingleK = int("shingle_k", 5),
+              numHashes = int("num_hashes", 64),
+              bands = int("bands", 16),
+              maxBucket = int("max_bucket", 1000))
           case "exact" =>
-            val keys = options.get("key_columns") match {
-              case Some(xs: Seq[_]) => xs.map(_.toString)
-              case Some(s) => Seq(s.toString)
-              case None => throw new PluginExecutionError(
-                "Option 'key_columns' is required for method 'exact'")
-            }
-            Dedup.exact(df, idCol, keys)
+            Dedup.exact(df, idCol, stringList("key_columns").toTry.get)
           case "fingerprint" =>
             Dedup.byFingerprint(df, idCol, textColumn)
           case "minhash" =>
             Dedup.byMinhash(df, idCol, textColumn,
-              threshold = numOpt("threshold", 0.8),
-              shingleK = numOpt("shingle_k", 5).toInt,
-              numHashes = numOpt("num_hashes", 64).toInt,
-              bands = numOpt("bands", 16).toInt)
-            case "winnow_pairs" =>
+              threshold = num("threshold", 0.8),
+              shingleK = int("shingle_k", 5),
+              numHashes = int("num_hashes", 64),
+              bands = int("bands", 16))
+          case "winnow_pairs" =>
             Dedup.winnowCandidatePairs(df, idCol, textColumn,
-              k = numOpt("k", 5).toInt, w = numOpt("w", 4).toInt,
-              minShared = numOpt("min_shared", 3).toInt,
-              maxFpFreq = numOpt("max_fp_freq", 20).toInt)
+              k = int("k", 5), w = int("w", 4),
+              minShared = int("min_shared", 3),
+              maxFpFreq = int("max_fp_freq", 20))
           case "simhash_pairs" =>
             Dedup.simhashPairs(df, idCol, textColumn,
-              maxHamming = numOpt("max_hamming", 3).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+              maxHamming = int("max_hamming", 3),
+              maxBucket = int("max_bucket", 1000))
           case "image_pairs" =>
-            Dedup.imageHashPairs(df, idCol,
-              options.getOrElse("payload_column", "payload").toString,
-              maxHamming = numOpt("max_hamming", 6).toInt,
-              chunks = numOpt("chunks", 8).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+            Dedup.imageHashPairs(df, idCol, str("payload_column", "payload"),
+              maxHamming = int("max_hamming", 6),
+              chunks = int("chunks", 8),
+              maxBucket = int("max_bucket", 1000))
           case "audio_pairs" =>
-            Dedup.audioHashPairs(df, idCol,
-              options.getOrElse("payload_column", "payload").toString,
-              maxHamming = numOpt("max_hamming", 6).toInt,
-              chunks = numOpt("chunks", 8).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+            Dedup.audioHashPairs(df, idCol, str("payload_column", "payload"),
+              maxHamming = int("max_hamming", 6),
+              chunks = int("chunks", 8),
+              maxBucket = int("max_bucket", 1000))
           case "ngram_pairs" =>
             Dedup.ngramJaccardPairs(df, idCol, textColumn,
-              n = numOpt("n", 3).toInt,
-              threshold = numOpt("threshold", 0.5),
-              blockCol = options.get("block_column").map(_.toString),
+              n = int("n", 3),
+              threshold = num("threshold", 0.5),
+              blockCol = str("block_column"),
               // the quadratic-block escape hatch must be TOML-reachable
-              maxBlock = numOpt("max_block", 20000).toInt)
+              maxBlock = int("max_block", 20000))
           case "embedding_pairs" =>
             Dedup.embeddingCosinePairs(df, idCol,
-              options.getOrElse("embedding_column", "embedding").toString,
-              threshold = numOpt("threshold", 0.95),
-              planes = numOpt("planes", 8).toInt,
-              probeBits = numOpt("probe_bits", 1).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt,
-              overCap = options.getOrElse("over_cap", "drop").toString,
+              str("embedding_column", "embedding"),
+              threshold = num("threshold", 0.95),
+              planes = int("planes", 8),
+              probeBits = int("probe_bits", 1),
+              maxBucket = int("max_bucket", 1000),
+              overCap = str("over_cap", "drop"),
               // tables > 1 = banded (multi-table) LSH: recall
               // 1-(1-p^planes)^tables without widening any band's
               // buckets — the scale knob for pair recall
-              tables = numOpt("tables", 1).toInt,
+              tables = int("tables", 1),
               // auto_planes: plane count tracks the corpus so the
               // flood cap never silently saturates (probe depth
               // re-solved for recall_floor) — the single-table
               // scale knob; see Dedup.embeddingCosinePairs
-              autoPlanes = options.get("auto_planes")
-                .exists(_.toString.toBoolean),
-              recallFloor = numOpt("recall_floor", 0.92))
+              autoPlanes = flag("auto_planes", false),
+              recallFloor = num("recall_floor", 0.92))
           case "boilerplate_lines" =>
             Dedup.removeBoilerplateLines(df, idCol, textColumn,
-              minDocs = numOpt("min_docs", 3).toInt)
+              minDocs = int("min_docs", 3))
           case "span_removal" =>
             graft.ops.DupSpans.removeDuplicatedSpans(df, idCol, textColumn,
-              k = numOpt("k", 8).toInt,
-              minOccurrences = numOpt("min_occurrences", 2).toInt)
+              k = int("k", 8),
+              minOccurrences = int("min_occurrences", 2))
           case "semantic" =>
-            Dedup.semDeDup(df, idCol,
-              options.getOrElse("embedding_column", "embedding").toString,
-              threshold = numOpt("threshold", 0.95),
-              nClusters = numOpt("n_clusters", 16).toInt,
-              assign = options.getOrElse("assign", "kmeans").toString,
-              nAssign = numOpt("n_assign", 1).toInt)
+            Dedup.semDeDup(df, idCol, str("embedding_column", "embedding"),
+              threshold = num("threshold", 0.95),
+              nClusters = int("n_clusters", 16),
+              assign = str("assign", "kmeans"),
+              nAssign = int("n_assign", 1))
           case "incremental" =>
             // batch-vs-stored-corpus dedup: the reference is a table
             // on disk (yesterday's corpus), not a second stream
-            val refPath = options.get("reference_path") match {
-              case Some(p) => resolvePath(p.toString)
-              case None => throw new PluginExecutionError(
-                "Option 'reference_path' is required for method 'incremental'")
-            }
-            val key = options.getOrElse("key_column", "fingerprint").toString
             graft.ops.IncrementalDedup.cleaned(df,
-              df.sparkSession.read.parquet(refPath.toString), key,
-              expectedItems = numOpt("expected_items", 0).toLong,
-              fpp = numOpt("fpp", 0.01))
+              df.sparkSession.read.parquet(resolvePath(
+                requiredString("reference_path").toTry.get).toString),
+              str("key_column", "fingerprint"),
+              expectedItems = long("expected_items", 0L),
+              fpp = num("fpp", 0.01))
           case "incremental_neardup" =>
             // fuzzy counterpart: drop batch docs whose text verified-
             // near-dups ANY stored-corpus doc
-            val refPath = options.get("reference_path") match {
-              case Some(p) => resolvePath(p.toString)
-              case None => throw new PluginExecutionError(
-                "Option 'reference_path' is required for method 'incremental_neardup'")
-            }
             graft.ops.IncrementalDedup.nearDupCleaned(df,
-              df.sparkSession.read.parquet(refPath.toString),
+              df.sparkSession.read.parquet(resolvePath(
+                requiredString("reference_path").toTry.get).toString),
               idCol, textColumn,
-              shingleK = numOpt("shingle_k", 5).toInt,
-              threshold = numOpt("threshold", 0.8),
-              numHashes = numOpt("num_hashes", 64).toInt,
-              bands = numOpt("bands", 16).toInt,
-              maxBucket = numOpt("max_bucket", 1000).toInt)
+              shingleK = int("shingle_k", 5),
+              threshold = num("threshold", 0.8),
+              numHashes = int("num_hashes", 64),
+              bands = int("bands", 16),
+              maxBucket = int("max_bucket", 1000))
           case other => throw new PluginExecutionError(
             s"Unknown dedup method: '$other'")
         }
       }
     } yield out
-
-  private def textColumn: String =
-    options.getOrElse("text_column", "text").toString
-
-  private def numOpt(key: String, default: Double): Double =
-    options.get(key).map(_.toString.toDouble).getOrElse(default)
 }
 
 /** Config-driven deterministic sampling ([[graft.ops.Sampling]]):
@@ -191,29 +165,21 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
       keyCol <- requiredString("key_column")
       out <- method match {
         case "uniform" =>
-          required("rate").flatMap(r => graft.core.Errors.safe(
-            graft.ops.Sampling.sampleByHash(df, keyCol, r.toString.toDouble)))
+          required("rate", OptionKind.double).flatMap(r => graft.core.Errors.safe(
+            graft.ops.Sampling.sampleByHash(df, keyCol, r)))
         case "stratified_cap" =>
           for {
             groups <- stringList("group_columns")
-            cap <- required("cap")
+            cap <- required("cap", OptionKind.int)
             out <- graft.core.Errors.safe(
-              graft.ops.Sampling.stratifiedCap(df, groups, keyCol,
-                cap.toString.toDouble.toInt))
+              graft.ops.Sampling.stratifiedCap(df, groups, keyCol, cap))
           } yield out
         case "split" =>
-          // parallel lists (not a table): band order defines the hash
-          // bounds, and TOML tables do not preserve key order
           for {
-            names <- stringList("split_names")
-            fracs <- stringList("split_fracs")
-            out <- graft.core.Errors.safe {
-              require(names.size == fracs.size,
-                "split_names and split_fracs must align")
-              graft.ops.Sampling.assignSplit(df, keyCol,
-                names.zip(fracs.map(_.toDouble)),
-                outCol = options.getOrElse("output_column", "split").toString)
-            }
+            splits <- splits()
+            out <- graft.core.Errors.safe(
+              graft.ops.Sampling.assignSplit(df, keyCol, splits,
+                outCol = str("output_column", "split")))
           } yield out
         case "split_leakage_safe" =>
           // split keyed on near-dup COMPONENTS: a duplicate family
@@ -221,20 +187,11 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
           // generator over text_column.
           import org.apache.spark.sql.functions.col
           for {
-            names <- stringList("split_names")
-            fracs <- stringList("split_fracs")
+            splits <- splits()
             out <- graft.core.Errors.safe {
-              require(names.size == fracs.size,
-                "split_names and split_fracs must align")
-              val textCol =
-                options.getOrElse("text_column", "text").toString
-              def num(k: String, d: Double): Double =
-                options.get(k).map(_.toString.toDouble).getOrElse(d)
-              val splits = names.zip(fracs.map(_.toDouble))
-              val outName =
-                options.getOrElse("output_column", "split").toString
-              options.getOrElse("pair_method", "fingerprint")
-                  .toString match {
+              val textCol = str("text_column", "text")
+              val outName = str("output_column", "split")
+              str("pair_method", "fingerprint") match {
                 case "fingerprint" =>
                   // transitive equality → one agg + one join, no
                   // iterative contraction
@@ -246,10 +203,10 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
                   val src = graft.ops.Lineage.once(df)
                   val pairs = graft.ops.Dedup.minhashCandidatePairs(
                       src, keyCol, textCol,
-                      shingleK = num("shingle_k", 5).toInt,
-                      numHashes = num("num_hashes", 64).toInt,
-                      bands = num("bands", 16).toInt,
-                      maxBucket = num("max_bucket", 1000).toInt,
+                      shingleK = int("shingle_k", 5),
+                      numHashes = int("num_hashes", 64),
+                      bands = int("bands", 16),
+                      maxBucket = int("max_bucket", 1000),
                       overCap = "star")
                     .filter(col("est_jaccard") >= num("threshold", 0.8))
                     .select("id_a", "id_b")
@@ -266,25 +223,18 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
           // deterministic (md5-keyed), heavier weights favored
           for {
             weightCol <- requiredString("weight_column")
-            kv <- required("k")
+            k <- required("k", OptionKind.int)
             out <- graft.core.Errors.safe(
-              graft.ops.Sampling.weightedSample(df, keyCol, weightCol,
-                kv.toString.toDouble.toInt))
+              graft.ops.Sampling.weightedSample(df, keyCol, weightCol, k))
           } yield out
         case "mix_weights" =>
           for {
             groupCol <- requiredString("group_column")
-            w <- required("weights")
+            weights <- required("weights", OptionKind.tableOf(OptionKind.double))
             out <- graft.core.Errors.safe {
-              val weights = w match {
-                case m: Map[_, _] =>
-                  m.map { case (k, v) => k.toString -> v.toString.toDouble }
-                case other => throw new PluginExecutionError(
-                  s"Option 'weights' must be a table of source -> weight, got: $other")
-              }
               // budget_column switches the share denominator from row
               // counts to the column's mass (token/char budget mix)
-              options.get("budget_column").map(_.toString) match {
+              str("budget_column") match {
                 case Some(bc) => graft.ops.Sampling.mixToBudgetWeights(
                   df, groupCol, keyCol, bc, weights)
                 case None => graft.ops.Sampling.mixToWeights(
@@ -297,41 +247,44 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
           // own per-source mass, so no weights table is needed
           for {
             groupCol <- requiredString("group_column")
-            tv <- required("temperature")
+            t <- required("temperature", OptionKind.double)
             out <- graft.core.Errors.safe(
-              graft.ops.Sampling.mixByTemperature(df, groupCol, keyCol,
-                tv.toString.toDouble,
-                options.get("budget_column").map(_.toString),
+              graft.ops.Sampling.mixByTemperature(df, groupCol, keyCol, t,
+                str("budget_column"),
                 // the group-cardinality cap's escape hatch must be
                 // reachable from TOML (legit 20k-domain mixes exist)
-                maxGroups = options.get("max_groups")
-                  .map(_.toString.toDouble.toInt).getOrElse(10000)))
+                maxGroups = int("max_groups", 10000)))
           } yield out
         case "shuffle_shard" =>
           // seeded deterministic shuffle as (shard, pos) — epoch
           // reshuffles = new seed, no source rewrite
           for {
-            nv <- required("n_shards")
+            nShards <- required("n_shards", OptionKind.int)
             out <- graft.core.Errors.safe(
               graft.ops.Sampling.shuffleShard(df, keyCol,
-                // parse as long, NOT via double: seeds above 2^53
-                // would silently round to a different permutation
-                seed = options.get("seed")
-                  .map(s => try s.toString.toLong catch {
-                    case _: NumberFormatException =>
-                      throw new PluginExecutionError(
-                        s"Option 'seed' must be an integer, got: $s")
-                  }).getOrElse(0L),
-                nShards = nv.toString.toDouble.toInt,
+                // an integer kind parses exactly, NOT via double: seeds
+                // above 2^53 would silently round to another permutation
+                seed = long("seed", 0L),
+                nShards = nShards,
                 // overridable like split's output_column: a frame may
                 // already carry shard/pos columns
-                shardCol = options.getOrElse("shard_column", "shard")
-                  .toString,
-                posCol = options.getOrElse("pos_column", "pos").toString))
+                shardCol = str("shard_column", "shard"),
+                posCol = str("pos_column", "pos")))
           } yield out
         case other => Left(new PluginExecutionError(
           s"Unknown sample method: '$other'"))
       }
+    } yield out
+
+  /** `split_names` zipped with `split_fracs`: parallel lists (not a
+    * table), since band order defines the hash bounds and TOML tables
+    * do not preserve key order. */
+  private def splits(): Either[Throwable, Seq[(String, Double)]] =
+    for {
+      names <- stringList("split_names")
+      fracs <- required("split_fracs", OptionKind.numbers)
+      out <- Either.cond(names.size == fracs.size, names.zip(fracs),
+        new PluginExecutionError("split_names and split_fracs must align"))
     } yield out
 }
 
@@ -345,10 +298,9 @@ class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
       import org.apache.spark.sql.functions.col
-      val tc = options.getOrElse("text_column", "text").toString
-      val out = options.getOrElse("output_column", tc).toString
-      val redacted = df.withColumn(out, Text.redactPii(col(tc)))
-      if (options.get("with_counts").exists(_.toString.toBoolean))
+      val tc = str("text_column", "text")
+      val redacted = df.withColumn(str("output_column", tc), Text.redactPii(col(tc)))
+      if (flag("with_counts", false))
         Text.piiCounts(col(tc)).foldLeft(redacted) { case (acc, (n, c)) =>
           acc.withColumn(n, c.cast("long"))
         }
@@ -373,20 +325,19 @@ class ContaminationPlugin(options: Map[String, Any], configDir: Path, label: Str
       bench <- streams.getOrElse(bl, Left(new NoSuchElementException(
         s"No input data with label '$bl' for contamination plugin")))
       idCol <- requiredString("id_column")
-      benchId = options.getOrElse("bench_id_column", "doc_id").toString
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
-        val btc = options.getOrElse("bench_text_column", tc).toString
-        val n = options.get("n").map(_.toString.toDouble.toInt).getOrElse(8)
-        options.getOrElse("mode", "flag").toString match {
+        val benchId = str("bench_id_column", "doc_id")
+        val tc = str("text_column", "text")
+        val btc = str("bench_text_column", tc)
+        val n = int("n", 8)
+        str("mode", "flag") match {
           case "flag" =>
             graft.ops.Contamination.ngramOverlap(df, idCol, tc,
               bench, benchId, btc, n)
           case "remove" =>
             graft.ops.Contamination.removeContaminated(df, idCol, tc,
               bench, benchId, btc, n,
-              minOverlap = options.get("min_overlap")
-                .map(_.toString.toDouble.toLong).getOrElse(1L))
+              minOverlap = long("min_overlap", 1L))
           case other => throw new PluginExecutionError(
             s"Unknown contamination mode: '$other'")
         }
@@ -415,29 +366,20 @@ class DsirPlugin(options: Map[String, Any], configDir: Path, label: String)
     * 1 — both paths share [[graft.ops.Dsir.selectMix]]'s contract
     * (a 1-element mixture is exactly the single-target model). */
   private def targetSpec(): Either[Throwable, Seq[(String, Double)]] =
-    options.get("target_labels") match {
-      case Some(xs: Seq[_]) =>
-        val labels = xs.map(_.toString)
+    graft.core.Errors.safe(strs("target_labels")).flatMap {
+      case Some(labels) =>
         if (labels.isEmpty)
           Left(new graft.core.SchemaValidationError(
             "target_labels must be non-empty"))
         else graft.core.Errors.safe {
-          val weights = options.get("target_weights") match {
-            case Some(ws: Seq[_]) =>
-              val w = ws.map(_.toString.toDouble)
-              if (w.size != labels.size)
-                throw new graft.core.SchemaValidationError(
-                  s"target_weights has ${w.size} entries for " +
-                    s"${labels.size} target_labels")
-              w
-            case Some(other) => throw new graft.core.SchemaValidationError(
-              s"target_weights must be a list, got '$other'")
-            case None => Seq.fill(labels.size)(1.0)
-          }
+          val weights = opt("target_weights", OptionKind.numbers)
+            .getOrElse(Seq.fill(labels.size)(1.0))
+          if (weights.size != labels.size)
+            throw new graft.core.SchemaValidationError(
+              s"target_weights has ${weights.size} entries for " +
+                s"${labels.size} target_labels")
           labels.zip(weights)
         }
-      case Some(other) => Left(new graft.core.SchemaValidationError(
-        s"target_labels must be a list, got '$other'"))
       case None =>
         // a half-migrated config (singular target_label + leftover
         // target_weights) must fail loudly, not run at weight 1.0
@@ -462,25 +404,21 @@ class DsirPlugin(options: Map[String, Any], configDir: Path, label: String)
             rest <- acc
           } yield (t, w) :: rest
       }
-      kv <- required("k")
+      k <- required("k", OptionKind.int)
       out <- graft.core.Errors.safe {
-        val idCol = options.getOrElse("id_column", "doc_id").toString
-        val tc = options.getOrElse("text_column", "text").toString
-        val ttc = options.getOrElse("target_text_column", tc).toString
+        val idCol = str("id_column", "doc_id")
+        val tc = str("text_column", "text")
+        val ttc = str("target_text_column", tc)
         // project, don't rename: renaming would collide when the
         // target already carries a column named `tc`, and the fit
         // needs only the text column anyway (no target id required).
         // target.col (not functions.col): literal top-level name
         // resolution, so a column literally named "meta.text" keeps
         // working instead of parsing as struct-field access
-        val k = kv.toString.toDouble.toInt
-        val buckets = options.get("buckets")
-          .map(_.toString.toDouble.toInt).getOrElse(8192)
-        val alpha = options.get("alpha")
-          .map(_.toString.toDouble).getOrElse(1.0)
-        val seed = options.getOrElse("seed", "dsir").toString
-        val roundTo = options.get("round_to")
-          .map(_.toString.toDouble.toInt).getOrElse(4)
+        val buckets = int("buckets", 8192)
+        val alpha = num("alpha", 1.0)
+        val seed = str("seed", "dsir")
+        val roundTo = int("round_to", 4)
         val projected = targets.map { case (t, w) =>
           (t.select(t.col(ttc).as(tc)), w) }
         // Single target keeps the EXACT scoreDocs log spelling
@@ -516,18 +454,14 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "sessionize"
 
-  private def method: String =
-    options.get("method").map(_.toString).getOrElse("islands")
-
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       user <- requiredString("user_column")
       ts <- requiredString("ts_column")
       value <- requiredString("value_column")
+      gapSeconds <- graft.core.Errors.safe(long("gap_seconds", 1800L))
       out <- {
-        val gapSeconds = options.get("gap_seconds")
-          .map(_.toString.toDouble.toLong).getOrElse(1800L)
-        method match {
+        str("method", "islands") match {
           case "islands" =>
             requiredString("tie_column").flatMap(tie =>
               graft.core.Errors.safe(
@@ -539,8 +473,7 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
             graft.core.Errors.safe(
               graft.ops.Sessionize.nativeSessionWindow(df, user, ts,
                 value, gapSeconds,
-                tsUnit = options.get("ts_unit").map(_.toString)
-                  .getOrElse("nanos")))
+                tsUnit = str("ts_unit", "nanos")))
           case other => Left(new PluginExecutionError(
             s"Unknown sessionize method: '$other' " +
               "(expected islands|session_window)"))
@@ -561,12 +494,11 @@ class ChunkPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe {
-        val size = options.get("size").map(_.toString.toInt).getOrElse(1024)
-        graft.ops.Chunking.slidingWindow(df, idCol,
-          options.getOrElse("text_column", "text").toString,
+        val size = int("size", 1024)
+        graft.ops.Chunking.slidingWindow(df, idCol, str("text_column", "text"),
           size = size,
-          stride = options.get("stride").map(_.toString.toInt).getOrElse(size),
-          minTokens = options.get("min_tokens").map(_.toString.toInt).getOrElse(1))
+          stride = int("stride", size),
+          minTokens = int("min_tokens", 1))
       }
     } yield out
 }
@@ -590,8 +522,8 @@ class PackPlugin(options: Map[String, Any], configDir: Path, label: String)
       shardCols <- stringList("shard_columns")
       orderCol <- requiredString("order_column")
       out <- graft.core.Errors.safe {
-        val budget = options.get("budget").map(_.toString.toInt).getOrElse(2048)
-        options.getOrElse("method", "chunks").toString match {
+        val budget = int("budget", 2048)
+        str("method", "chunks") match {
           case "chunks" => graft.ops.Packing.packChunks(
             df, tokensCol, budget, shardCols, orderCol)
           case "greedy" => graft.ops.Packing.packGreedy(
@@ -615,11 +547,11 @@ class BlocklistPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       words <- stringList("words")
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
-        options.getOrElse("mode", "filter").toString match {
+        val tc = str("text_column", "text")
+        str("mode", "filter") match {
           case "flags" => graft.ops.Text.withBlocklistStats(df, tc, words)
           case "filter" => graft.ops.Text.filterBlocklisted(df, tc, words,
-            options.get("max_ratio").map(_.toString.toDouble).getOrElse(0.0))
+            num("max_ratio", 0.0))
           case other => throw new PluginExecutionError(
             s"Unknown blocklist mode: '$other'")
         }
@@ -642,14 +574,10 @@ class PivotPlugin(options: Map[String, Any], configDir: Path, label: String)
       pivotCol <- requiredString("pivot_column")
       values <- stringList("values")
       out <- graft.core.Errors.safe {
-        val agg = org.apache.spark.sql.functions.expr(
-          options.getOrElse("aggregation", "count(*)").toString)
+        val agg = org.apache.spark.sql.functions.expr(str("aggregation", "count(*)"))
         val wide = df.groupBy(groups.map(org.apache.spark.sql.functions.col): _*)
           .pivot(pivotCol, values).agg(agg)
-        options.get("fill") match {
-          case Some(v) => wide.na.fill(v.toString.toDouble)
-          case None => wide
-        }
+        num("fill").fold(wide)(wide.na.fill(_))
       }
     } yield out
 }
@@ -669,8 +597,8 @@ class UnpivotPlugin(options: Map[String, Any], configDir: Path, label: String)
         import org.apache.spark.sql.functions.col
         df.unpivot(ids.map(col).toArray,
           vals.map(c => col(c).cast("double").as(c)).toArray,
-          options.getOrElse("variable_column", "measure").toString,
-          options.getOrElse("value_column", "value").toString)
+          str("variable_column", "measure"),
+          str("value_column", "value"))
       }
     } yield out
 }
@@ -688,12 +616,11 @@ class VocabEncodePlugin(options: Map[String, Any], configDir: Path, label: Strin
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
-      val tc = options.getOrElse("text_column", "text").toString
-      val vocab = graft.ops.Vocab.topTokens(df, tc,
-        options.get("vocab_size").map(_.toString.toInt).getOrElse(65536))
+      val tc = str("text_column", "text")
+      val vocab = graft.ops.Vocab.topTokens(df, tc, int("vocab_size", 65536))
       graft.ops.Vocab.encode(df, tc, vocab,
-        oovId = options.get("oov_id").map(_.toString.toLong).getOrElse(-1L),
-        outCol = options.getOrElse("output_column", "token_ids").toString)
+        oovId = long("oov_id", -1L),
+        outCol = str("output_column", "token_ids"))
     }
 }
 
@@ -721,9 +648,9 @@ class BpePlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "bpe"
 
   private def mergesFor(df: DataFrame): Seq[(String, String)] =
-    options.get("merges_file") match {
+    str("merges_file") match {
       case Some(p) =>
-        val path = resolvePath(p.toString)
+        val path = resolvePath(p)
         val lines = java.nio.file.Files.readAllLines(path)
         import scala.jdk.CollectionConverters._
         lines.asScala.iterator.map(_.trim).filter(_.nonEmpty).map { l =>
@@ -734,36 +661,25 @@ class BpePlugin(options: Map[String, Any], configDir: Path, label: String)
           (l.substring(0, i), l.substring(i + 1))
         }.toSeq
       case None =>
-        graft.ops.Bpe.train(df,
-          options.getOrElse("text_column", "text").toString,
-          numMerges = options.get("num_merges")
-            .map(_.toString.toDouble.toInt).getOrElse(200),
-          sampleN = options.get("sample_n")
-            .map(_.toString.toDouble.toInt).getOrElse(2048),
-          minPairCount = options.get("min_pair_count")
-            .map(_.toString.toDouble.toLong).getOrElse(2L))
+        graft.ops.Bpe.train(df, str("text_column", "text"),
+          numMerges = int("num_merges", 200),
+          sampleN = int("sample_n", 2048),
+          minPairCount = long("min_pair_count", 2L))
     }
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    for {
-      method <- Right(options.getOrElse("method", "count").toString)
-      out <- method match {
-        case "count" => graft.core.Errors.safe {
-          graft.ops.Bpe.withTokenCount(df,
-            options.getOrElse("text_column", "text").toString,
-            mergesFor(df),
-            out = options.getOrElse("output_column", "n_tokens_bpe").toString)
-        }
-        case "encode" => graft.core.Errors.safe {
-          graft.ops.Bpe.encode(df,
-            options.getOrElse("text_column", "text").toString,
-            mergesFor(df),
-            out = options.getOrElse("output_column", "tokens").toString)
-        }
-        case other => Left(new PluginExecutionError(
-          s"Unknown bpe method: '$other' (expected count | encode)"))
+    graft.core.Errors.safe {
+      str("method", "count") match {
+        case "count" =>
+          graft.ops.Bpe.withTokenCount(df, str("text_column", "text"),
+            mergesFor(df), out = str("output_column", "n_tokens_bpe"))
+        case "encode" =>
+          graft.ops.Bpe.encode(df, str("text_column", "text"),
+            mergesFor(df), out = str("output_column", "tokens"))
+        case other => throw new PluginExecutionError(
+          s"Unknown bpe method: '$other' (expected count | encode)")
       }
-    } yield out
+    }
 }
 
 /** Config-driven corpus profiling ([[graft.ops.Profiling]]): one-pass
@@ -776,16 +692,9 @@ class ProfilePlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
-      cols <- options.get("columns") match {
-        case Some(xs: Seq[_]) => Right(xs.map(_.toString))
-        case Some(s) => Right(Seq(s.toString))
-        case None => Left(new PluginExecutionError(
-          "Option 'columns' is required"))
-      }
-      out <- graft.core.Errors.safe {
-        graft.ops.Profiling.columnStats(df, cols,
-          exact = options.get("exact").exists(_.toString.toBoolean))
-      }
+      cols <- stringList("columns")
+      out <- graft.core.Errors.safe(
+        graft.ops.Profiling.columnStats(df, cols, exact = flag("exact", false)))
     } yield out
 }
 
@@ -812,37 +721,27 @@ class MultimodalPlugin(options: Map[String, Any], configDir: Path, label: String
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "multimodal"
 
-  private def payloadColumn: String =
-    options.getOrElse("payload_column", "payload").toString
-
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       method <- requiredString("method")
       out <- graft.core.Errors.safe {
+        val payloadColumn = str("payload_column", "payload")
         method match {
           case "decode_meta" =>
             graft.ops.Multimodal.withDecodedMeta(df, payloadColumn,
-              options.getOrElse("output_column", "media_meta").toString)
+              str("output_column", "media_meta"))
           case "resize" =>
             graft.ops.Multimodal.withResized(df, payloadColumn,
-              options.get("factor").map(_.toString.toDouble.toInt).getOrElse(2),
-              options.getOrElse("output_column", "resized").toString)
+              int("factor", 2), str("output_column", "resized"))
           case "sample_frames" =>
-            graft.ops.Multimodal.sampleFrames(df,
-              options.getOrElse("id_column", "doc_id").toString,
-              payloadColumn,
-              options.get("frames").map(_.toString.toDouble.toInt).getOrElse(4))
+            graft.ops.Multimodal.sampleFrames(df, str("id_column", "doc_id"),
+              payloadColumn, int("frames", 4))
           case "audio_features" =>
             graft.ops.Audio.withAudioFeatures(df, payloadColumn,
-              options.getOrElse("output_column", "audio").toString)
+              str("output_column", "audio"))
           case "video_frames" =>
-            graft.ops.Video.sampleVideoFrames(df,
-              options.getOrElse("id_column", "doc_id").toString,
-              payloadColumn,
-              options.get("stride").map(_.toString.toDouble.toInt)
-                .getOrElse(1),
-              options.get("max_frames").map(_.toString.toDouble.toInt)
-                .getOrElse(256))
+            graft.ops.Video.sampleVideoFrames(df, str("id_column", "doc_id"),
+              payloadColumn, int("stride", 1), int("max_frames", 256))
           case other => throw new PluginExecutionError(
             s"Unknown multimodal method: '$other'")
         }
@@ -870,145 +769,137 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
     with graft.core.MultiStreamTransformPlugin {
   def name: String = "similarity"
 
-  private def num(key: String, default: Double): Double =
-    options.get(key).map(_.toString.toDouble).getOrElse(default)
+  private def embCol: String = str("embedding_column", "embedding")
 
   def executeWith(df: DataFrame,
                   streams: Map[String, Either[Throwable, DataFrame]])
-      : Either[Throwable, DataFrame] = {
-    val embCol0 = options.getOrElse("embedding_column", "embedding").toString
-    if (options.getOrElse("method", "brute").toString == "centroids")
-      return for {
-        groups <- stringList("group_by")
-        out <- graft.core.Errors.safe(
-          graft.ops.Similarity.groupCentroids(df, groups, embCol0))
-      } yield out
-    if (options.getOrElse("method", "brute").toString == "quantize_int8")
-      return graft.core.Errors.safe(
-        graft.ops.Similarity.quantizeInt8(df, embCol0))
-    if (options.getOrElse("method", "brute").toString == "pca_project")
-      return graft.core.Errors.safe(
-        graft.ops.Embeddings.pcaProject(df, embCol0,
-          k = num("k", 16).toInt,
-          whiten = options.get("whiten").exists(_.toString.toBoolean),
-          outCol = options.getOrElse("output_column", "pca").toString))
-    if (options.getOrElse("method", "brute").toString == "knn_graph")
-      return requiredString("id_column").flatMap(idCol =>
+      : Either[Throwable, DataFrame] =
+    graft.core.Errors.safe(str("method", "brute")).flatMap {
+      case "centroids" =>
+        stringList("group_by").flatMap(groups => graft.core.Errors.safe(
+          graft.ops.Similarity.groupCentroids(df, groups, embCol)))
+      case "quantize_int8" =>
+        graft.core.Errors.safe(graft.ops.Similarity.quantizeInt8(df, embCol))
+      case "pca_project" =>
         graft.core.Errors.safe(
-          graft.ops.Similarity.knnGraph(df, idCol, embCol0,
-            k = num("k", 10).toInt,
-            method = options.getOrElse("knn_method", "lsh").toString,
-            minCosine = num("min_cosine", -1.0),
-            planes = num("planes", 4).toInt,
-            probeBits = num("probe_bits", 3).toInt,
-            rerank = num("rerank", 64).toInt,
-            maxBucket = num("max_bucket", 1000).toInt,
-            // the brute cap's escape hatch must be reachable from TOML
-            maxBrute = num("max_brute", 100000).toInt,
-            // corpus-tracking plane count (default on); false pins
-            // the explicit `planes` regardless of corpus size
-            autoPlanes = options.get("auto_planes")
-              .forall(_.toString.toBoolean),
-            // scratch control: 0 = auto (slice the query side past
-            // 512k vectors), 1 = one-shot, >= 2 = that many slices;
-            // lsh only — rejected (not ignored) for knn_method=brute
-            queryBatches = num("query_batches", 0).toInt)))
-    if (options.getOrElse("method", "brute").toString == "knn_components")
-      return requiredString("id_column").flatMap(idCol =>
-        graft.core.Errors.safe(
-          graft.ops.Similarity.semanticClusters(df, idCol, embCol0,
-            k = num("k", 10).toInt,
-            minCosine = num("min_cosine", 0.0),
-            method = options.getOrElse("knn_method", "lsh").toString,
-            // "same options as knn_graph" (PLUGINS.md) — actually
-            // honored, not silently dropped
-            planes = num("planes", 4).toInt,
-            probeBits = num("probe_bits", 3).toInt,
-            rerank = num("rerank", 64).toInt,
-            maxBucket = num("max_bucket", 1000).toInt,
-            maxBrute = num("max_brute", 100000).toInt,
-            autoPlanes = options.get("auto_planes")
-              .forall(_.toString.toBoolean),
-            queryBatches = num("query_batches", 0).toInt)))
-    if (options.getOrElse("method", "brute").toString == "centroid_outliers")
-      return stringList("group_by").flatMap(groups =>
-        graft.core.Errors.safe(
-          graft.ops.Similarity.centroidBandFilter(df, groups, embCol0,
-            lo = num("band_lo", 0.0), hi = num("band_hi", 0.95),
-            distCol = options.getOrElse("output_column", "centroid_dist")
-              .toString)))
-    // persisted-index pair: build writes the partitioned IVF index
-    // (EAGER, stream passes through for downstream stages); query
-    // serves the stream's rows against an index built in THIS run or
-    // any earlier one — build once, query many
-    if (options.getOrElse("method", "brute").toString == "index_build")
-      return for {
-        idCol <- requiredString("id_column")
-        dir <- requiredString("index_dir")
-        out <- graft.core.Errors.safe {
-          graft.ops.VectorIndex.build(df, idCol, embCol0,
-            resolvePath(dir).toString, nlist = num("nlist", 64).toInt)
-          df
-        }
-      } yield out
-    if (options.getOrElse("method", "brute").toString == "index_append")
-      return for {
-        idCol <- requiredString("id_column")
-        dir <- requiredString("index_dir")
-        out <- graft.core.Errors.safe {
-          graft.ops.VectorIndex.append(df, idCol, embCol0,
-            resolvePath(dir).toString)
-          df
-        }
-      } yield out
-    if (options.getOrElse("method", "brute").toString == "index_query")
-      return for {
-        idCol <- requiredString("id_column")
-        dir <- requiredString("index_dir")
-        out <- graft.core.Errors.safe(
-          graft.ops.VectorIndex.topK(df.sparkSession,
-            resolvePath(dir).toString, df, idCol, embCol0,
-            k = num("k", 10).toInt, nprobe = num("nprobe", 7).toInt,
-            rerank = num("rerank", 64).toInt))
-      } yield out
-    for {
-      idCol <- requiredString("id_column")
-      ql <- requiredString("queries_label")
-      queries <- streams.getOrElse(ql, Left(new NoSuchElementException(
-        s"No input data with label '$ql' for similarity plugin")))
-      out <- graft.core.Errors.safe {
-        val embCol = embCol0
-        val k = num("k", 10).toInt
-        options.getOrElse("method", "brute").toString match {
-          case "brute" =>
-            // brute broadcasts the query stream — guard a mislabeled
-            // big table before it reaches the broadcast exchange
-            graft.ops.Similarity.requireBounded(queries,
-              num("max_queries", 100000).toInt,
-              s"similarity method=\"brute\" (query stream '$ql')")
-            graft.ops.Similarity.bruteForceTopK(df, queries, idCol, embCol, k)
-          case "lsh" =>
-            graft.ops.Similarity.lshTopK(df, queries, idCol, embCol, k,
-              planes = num("planes", 4).toInt,
-              probeBits = num("probe_bits", 3).toInt)
-          case "ivf" =>
-            graft.ops.Similarity.ivfTopK(df, queries, idCol, embCol, k,
-              nlist = num("nlist", 8).toInt, nprobe = num("nprobe", 7).toInt)
-          case "mmr" =>
-            graft.ops.Similarity.mmrTopK(df, queries, idCol, embCol, k,
-              poolSize = num("pool_size", 20).toInt,
-              lambda = num("lambda", 0.7))
-          case "ivfpq" =>
-            graft.ops.Similarity.ivfPqTopK(df, queries, idCol, embCol, k,
-              nlist = num("nlist", 8).toInt, nprobe = num("nprobe", 7).toInt,
-              m = num("m", 16).toInt, ksub = num("ksub", 16).toInt,
-              rerank = num("rerank", 128).toInt)
-          case other => throw new PluginExecutionError(
-            s"Unknown similarity method: '$other'")
-        }
-      }
-    } yield out
-  }
+          graft.ops.Embeddings.pcaProject(df, embCol,
+            k = int("k", 16),
+            whiten = flag("whiten", false),
+            outCol = str("output_column", "pca")))
+      case "knn_graph" =>
+        requiredString("id_column").flatMap(idCol =>
+          graft.core.Errors.safe(
+            graft.ops.Similarity.knnGraph(df, idCol, embCol,
+              k = int("k", 10),
+              method = str("knn_method", "lsh"),
+              minCosine = num("min_cosine", -1.0),
+              planes = int("planes", 4),
+              probeBits = int("probe_bits", 3),
+              rerank = int("rerank", 64),
+              maxBucket = int("max_bucket", 1000),
+              // the brute cap's escape hatch must be reachable from TOML
+              maxBrute = int("max_brute", 100000),
+              // corpus-tracking plane count (default on); false pins
+              // the explicit `planes` regardless of corpus size
+              autoPlanes = flag("auto_planes", true),
+              // scratch control: 0 = auto (slice the query side past
+              // 512k vectors), 1 = one-shot, >= 2 = that many slices;
+              // lsh only — rejected (not ignored) for knn_method=brute
+              queryBatches = int("query_batches", 0))))
+      case "knn_components" =>
+        requiredString("id_column").flatMap(idCol =>
+          graft.core.Errors.safe(
+            graft.ops.Similarity.semanticClusters(df, idCol, embCol,
+              k = int("k", 10),
+              minCosine = num("min_cosine", 0.0),
+              method = str("knn_method", "lsh"),
+              // "same options as knn_graph" (PLUGINS.md) — actually
+              // honored, not silently dropped
+              planes = int("planes", 4),
+              probeBits = int("probe_bits", 3),
+              rerank = int("rerank", 64),
+              maxBucket = int("max_bucket", 1000),
+              maxBrute = int("max_brute", 100000),
+              autoPlanes = flag("auto_planes", true),
+              queryBatches = int("query_batches", 0))))
+      case "centroid_outliers" =>
+        stringList("group_by").flatMap(groups =>
+          graft.core.Errors.safe(
+            graft.ops.Similarity.centroidBandFilter(df, groups, embCol,
+              lo = num("band_lo", 0.0), hi = num("band_hi", 0.95),
+              distCol = str("output_column", "centroid_dist"))))
+      // persisted-index pair: build writes the partitioned IVF index
+      // (EAGER, stream passes through for downstream stages); query
+      // serves the stream's rows against an index built in THIS run or
+      // any earlier one — build once, query many
+      case "index_build" =>
+        for {
+          idCol <- requiredString("id_column")
+          dir <- requiredString("index_dir")
+          out <- graft.core.Errors.safe {
+            graft.ops.VectorIndex.build(df, idCol, embCol,
+              resolvePath(dir).toString, nlist = int("nlist", 64))
+            df
+          }
+        } yield out
+      case "index_append" =>
+        for {
+          idCol <- requiredString("id_column")
+          dir <- requiredString("index_dir")
+          out <- graft.core.Errors.safe {
+            graft.ops.VectorIndex.append(df, idCol, embCol,
+              resolvePath(dir).toString)
+            df
+          }
+        } yield out
+      case "index_query" =>
+        for {
+          idCol <- requiredString("id_column")
+          dir <- requiredString("index_dir")
+          out <- graft.core.Errors.safe(
+            graft.ops.VectorIndex.topK(df.sparkSession,
+              resolvePath(dir).toString, df, idCol, embCol,
+              k = int("k", 10), nprobe = int("nprobe", 7),
+              rerank = int("rerank", 64)))
+        } yield out
+      case method =>
+        for {
+          idCol <- requiredString("id_column")
+          ql <- requiredString("queries_label")
+          queries <- streams.getOrElse(ql, Left(new NoSuchElementException(
+            s"No input data with label '$ql' for similarity plugin")))
+          out <- graft.core.Errors.safe {
+            val k = int("k", 10)
+            method match {
+              case "brute" =>
+                // brute broadcasts the query stream — guard a mislabeled
+                // big table before it reaches the broadcast exchange
+                graft.ops.Similarity.requireBounded(queries,
+                  int("max_queries", 100000),
+                  s"similarity method=\"brute\" (query stream '$ql')")
+                graft.ops.Similarity.bruteForceTopK(df, queries, idCol, embCol, k)
+              case "lsh" =>
+                graft.ops.Similarity.lshTopK(df, queries, idCol, embCol, k,
+                  planes = int("planes", 4),
+                  probeBits = int("probe_bits", 3))
+              case "ivf" =>
+                graft.ops.Similarity.ivfTopK(df, queries, idCol, embCol, k,
+                  nlist = int("nlist", 8), nprobe = int("nprobe", 7))
+              case "mmr" =>
+                graft.ops.Similarity.mmrTopK(df, queries, idCol, embCol, k,
+                  poolSize = int("pool_size", 20),
+                  lambda = num("lambda", 0.7))
+              case "ivfpq" =>
+                graft.ops.Similarity.ivfPqTopK(df, queries, idCol, embCol, k,
+                  nlist = int("nlist", 8), nprobe = int("nprobe", 7),
+                  m = int("m", 16), ksub = int("ksub", 16),
+                  rerank = int("rerank", 128))
+              case other => throw new PluginExecutionError(
+                s"Unknown similarity method: '$other'")
+            }
+          }
+        } yield out
+    }
 
   /** Kept where executing over zero rows would leave the plan or
     * fail: the index methods read or write `index_dir`; PCA, the kNN
@@ -1018,7 +909,6 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
   override def dryRunWith(schema: StructType,
                           schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] = {
-    val embCol = options.getOrElse("embedding_column", "embedding").toString
     def need(s: StructType, where: String, cols: String*): Either[Throwable, Unit] =
       cols.find(c => !s.fieldNames.contains(c)) match {
         case Some(c) => Left(new SchemaValidationError(s"Column '$c' not found in $where"))
@@ -1029,12 +919,12 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
       StructField("neighbor_id", neighborId),
       StructField("cosine", DoubleType),
       StructField("rank", IntegerType, nullable = false)))
-    options.getOrElse("method", "brute").toString match {
+    str("method", "brute") match {
       case "centroids" | "quantize_int8" | "centroid_outliers" | "brute" | "lsh" =>
         super.dryRunWith(schema, schemas)
       case "pca_project" =>
         need(schema, "schema", embCol).map(_ => StructType(schema.fields :+
-          StructField(options.getOrElse("output_column", "pca").toString,
+          StructField(str("output_column", "pca"),
             ArrayType(DoubleType, containsNull = false))))
       case "knn_graph" =>
         for {
@@ -1086,29 +976,26 @@ class PercentilesPlugin(options: Map[String, Any], configDir: Path, label: Strin
   def name: String = "percentiles"
 
   private def ps: Either[Throwable, Seq[(String, Double)]] =
-    required("percentiles").flatMap {
-      case xs: Seq[_] => graft.core.Errors.safe(xs.map { x =>
-        val p = x.toString.toDouble
+    required("percentiles", OptionKind.numbers).flatMap(xs =>
+      graft.core.Errors.safe(xs.map { p =>
         require(p >= 0.0 && p <= 1.0, s"percentile out of [0,1]: $p")
         val lbl = "p" + BigDecimal(p * 100).underlying.stripTrailingZeros
           .toPlainString.replace(".", "_")
         lbl -> p
-      })
-      case other => Left(new PluginExecutionError(
-        s"Option 'percentiles' must be a list of numbers, got: $other"))
-    }
+      }))
 
   private def band: Either[Throwable, (Double, Double)] =
     for {
-      lo <- required("band_lo").map(_.toString.toDouble)
-      hi <- required("band_hi").map(_.toString.toDouble)
+      lo <- required("band_lo", OptionKind.double)
+      hi <- required("band_hi", OptionKind.double)
     } yield (lo, hi)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       keys <- stringList("group_by")
       valueCol <- requiredString("value_column")
-      out <- options.getOrElse("method", "auto").toString match {
+      method <- graft.core.Errors.safe(str("method", "auto"))
+      out <- method match {
         case "auto" => ps.flatMap(pcts => graft.core.Errors.safe(
           graft.ops.Percentiles.exactInterpolatedAuto(df, keys, valueCol,
             pcts)))
@@ -1119,8 +1006,7 @@ class PercentilesPlugin(options: Map[String, Any], configDir: Path, label: Strin
             df, keys, valueCol, pcts)))
         case "band" => band.flatMap { case (lo, hi) =>
           graft.core.Errors.safe(graft.ops.Percentiles.filterByBand(
-            df, keys, valueCol, lo, hi,
-            options.getOrElse("output_column", "pct_rank").toString))
+            df, keys, valueCol, lo, hi, str("output_column", "pct_rank")))
         }
         case other => Left(new PluginExecutionError(
           s"Unknown percentiles method: '$other'"))
@@ -1131,7 +1017,7 @@ class PercentilesPlugin(options: Map[String, Any], configDir: Path, label: Strin
     * cardinality with a Spark job while the plan is built. The band
     * filter takes the derived dry run. */
   override def dryRun(schema: StructType): Either[Throwable, StructType] =
-    if (options.getOrElse("method", "auto").toString == "band")
+    if (str("method", "auto") == "band")
       super.dryRun(schema)
     else for {
       keys <- stringList("group_by")
@@ -1158,25 +1044,22 @@ class GopherFilterPlugin(options: Map[String, Any], configDir: Path, label: Stri
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "gopher_filter"
 
-  private def num(key: String, default: Double): Double =
-    options.get(key).map(_.toString.toDouble).getOrElse(default)
-
   private def thresholds: Text.GopherThresholds = Text.GopherThresholds(
-    minWords = num("min_words", 50).toInt,
-    maxWords = num("max_words", 100000).toInt,
+    minWords = int("min_words", 50),
+    maxWords = int("max_words", 100000),
     minMeanWordLen = num("min_mean_word_len", 3.0),
     maxMeanWordLen = num("max_mean_word_len", 10.0),
     maxSymbolRatio = num("max_symbol_ratio", 0.1),
     maxBulletLineFrac = num("max_bullet_line_frac", 0.9),
     maxEllipsisLineFrac = num("max_ellipsis_line_frac", 0.3),
     minAlphaWordFrac = num("min_alpha_word_frac", 0.8),
-    minStopwordHits = num("min_stopword_hits", 2).toInt,
+    minStopwordHits = int("min_stopword_hits", 2),
     maxDupLineFrac = num("max_dup_line_frac", 0.3))
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
-      val tc = options.getOrElse("text_column", "text").toString
-      options.getOrElse("mode", "filter").toString match {
+      val tc = str("text_column", "text")
+      str("mode", "filter") match {
         case "flags"  => Text.withGopherFlags(df, tc, thresholds)
         case "filter" => Text.gopherFilter(df, tc, thresholds)
         case other => throw new PluginExecutionError(
@@ -1203,19 +1086,14 @@ class DupSpansPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
-        val k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(8)
-        val minOcc = options.get("min_occurrences")
-          .map(_.toString.toDouble.toInt).getOrElse(2)
-        options.getOrElse("mode", "stats").toString match {
+        val tc = str("text_column", "text")
+        val k = int("k", 8)
+        val minOcc = int("min_occurrences", 2)
+        str("mode", "stats") match {
           case "stats" =>
             graft.ops.DupSpans.spanStats(df, idCol, tc, k, minOcc)
           case "filter" =>
-            val maxCov = options.get("max_coverage") match {
-              case Some(v) => v.toString.toDouble
-              case None => throw new PluginExecutionError(
-                "Option 'max_coverage' is required for mode 'filter'")
-            }
+            val maxCov = required("max_coverage", OptionKind.double).toTry.get
             graft.ops.DupSpans.filterByCoverage(df, idCol, tc, k, maxCov, minOcc)
           case other => throw new PluginExecutionError(
             s"Unknown dup_spans mode: '$other'")
@@ -1230,14 +1108,14 @@ class DupSpansPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- {
-        val tc = options.getOrElse("text_column", "text").toString
+        val tc = str("text_column", "text")
         if (!schema.fieldNames.contains(idCol))
           Left(new SchemaValidationError(
             s"Column '$idCol' not found in schema"))
         else if (!schema.fieldNames.contains(tc))
           Left(new SchemaValidationError(
             s"Column '$tc' not found in schema"))
-        else if (options.getOrElse("mode", "stats").toString == "filter")
+        else if (str("mode", "stats") == "filter")
           Right(schema) // gate keeps the corpus schema unchanged
         else Right(StructType(Seq(schema(idCol),
           StructField("n_tokens", LongType),
@@ -1265,15 +1143,13 @@ class C4Plugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "c4_filter"
 
   private def thresholds: Text.C4Thresholds = Text.C4Thresholds(
-    minLineWords = options.get("min_line_words")
-      .map(_.toString.toDouble.toInt).getOrElse(5),
-    minSentences = options.get("min_sentences")
-      .map(_.toString.toDouble.toInt).getOrElse(3))
+    minLineWords = int("min_line_words", 5),
+    minSentences = int("min_sentences", 3))
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
-      val tc = options.getOrElse("text_column", "text").toString
-      options.getOrElse("mode", "filter").toString match {
+      val tc = str("text_column", "text")
+      str("mode", "filter") match {
         case "flags"  => Text.withC4Flags(df, tc, thresholds)
         case "filter" => Text.c4Clean(df, tc, thresholds)
         case other => throw new PluginExecutionError(
@@ -1299,16 +1175,12 @@ class LmScorePlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
-        val addK = options.get("add_k").map(_.toString.toDouble).getOrElse(1.0)
-        options.getOrElse("mode", "score").toString match {
+        val tc = str("text_column", "text")
+        val addK = num("add_k", 1.0)
+        str("mode", "score") match {
           case "score" => graft.ops.LmScore.scoreDocs(df, idCol, tc, addK)
           case "filter" =>
-            val minLp = options.get("min_avg_logprob") match {
-              case Some(v) => v.toString.toDouble
-              case None => throw new PluginExecutionError(
-                "Option 'min_avg_logprob' is required for mode 'filter'")
-            }
+            val minLp = required("min_avg_logprob", OptionKind.double).toTry.get
             graft.ops.LmScore.filterByScore(df, idCol, tc, minLp, addK)
           case other => throw new PluginExecutionError(
             s"Unknown lm_score mode: '$other'")
@@ -1329,9 +1201,8 @@ class TfidfPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe(
-        graft.ops.Tfidf.topTerms(df, idCol,
-          options.getOrElse("text_column", "text").toString,
-          k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(10)))
+        graft.ops.Tfidf.topTerms(df, idCol, str("text_column", "text"),
+          k = int("k", 10)))
     } yield out
 }
 
@@ -1346,13 +1217,10 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "bm25"
 
   private def inlineQueries(): Either[Throwable, Seq[(String, String)]] =
-    required("queries").flatMap {
-      case m: Map[_, _] if m.nonEmpty =>
-        Right(m.toSeq.map { case (k, v) => k.toString -> v.toString }
-          .sortBy(_._1))
-      case other => Left(new PluginExecutionError(
-        s"Option 'queries' must be a non-empty table of query_id -> text, got: $other"))
-    }
+    required("queries", OptionKind.tableOf(OptionKind.string)).flatMap(m =>
+      if (m.isEmpty) Left(new PluginExecutionError(
+        "Option 'queries' must be a non-empty table of query_id -> text"))
+      else Right(m.toSeq.sortBy(_._1)))
 
   /** Query set: the inline `queries` table, or — stream-routing form
     * — a `queries_label` stream with (query_id, query_text) columns,
@@ -1360,19 +1228,18 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
     * already carries). */
   private def querySet(streams: Map[String, Either[Throwable, DataFrame]])
       : Either[Throwable, Seq[(String, String)]] =
-    options.get("queries_label").map(_.toString) match {
+    graft.core.Errors.safe(str("queries_label")).flatMap {
       case None => inlineQueries()
       case Some(ql) =>
         streams.getOrElse(ql, Left(new NoSuchElementException(
           s"No input data with label '$ql' for bm25 plugin"))).flatMap {
           qdf => graft.core.Errors.safe {
-            val idc = options.getOrElse("query_id_column", "query_id").toString
-            val txc = options.getOrElse("query_text_column", "query_text").toString
+            val idc = str("query_id_column", "query_id")
+            val txc = str("query_text_column", "query_text")
             // the collect is the operator's broadcast-side contract,
             // but a mislabeled BIG table must fail with a clear cap
             // error, not OOM the driver — limit bounds the fetch.
-            val maxQ = options.get("max_queries")
-              .map(_.toString.toDouble.toInt).getOrElse(10000)
+            val maxQ = int("max_queries", 10000)
             val rows = qdf.select(idc, txc)
               .limit(math.min(maxQ.toLong + 1, Int.MaxValue.toLong).toInt)
               .collect()
@@ -1395,11 +1262,8 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
       idCol <- requiredString("id_column")
       qs <- querySet(streams)
       out <- graft.core.Errors.safe(
-        graft.ops.Bm25.topK(df, idCol,
-          options.getOrElse("text_column", "text").toString, qs,
-          k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(10),
-          k1 = options.get("k1").map(_.toString.toDouble).getOrElse(1.2),
-          b = options.get("b").map(_.toString.toDouble).getOrElse(0.75)))
+        graft.ops.Bm25.topK(df, idCol, str("text_column", "text"), qs,
+          k = int("k", 10), k1 = num("k1", 1.2), b = num("b", 0.75)))
     } yield out
 
   /** Kept for `queries_label`: that stream is collected driver-side
@@ -1408,13 +1272,13 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
   override def dryRunWith(schema: StructType,
                           schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] =
-    options.get("queries_label").map(_.toString) match {
+    str("queries_label") match {
       case None => super.dryRunWith(schema, schemas)
       case Some(ql) => for {
         idCol <- requiredString("id_column")
         _ <- schemas.getOrElse(ql, Left(new NoSuchElementException(
           s"No input data with label '$ql' for bm25 plugin")))
-        tc = options.getOrElse("text_column", "text").toString
+        tc = str("text_column", "text")
         out <-
           if (!schema.fieldNames.contains(idCol))
             Left(new SchemaValidationError(
@@ -1444,10 +1308,8 @@ class NgramsPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe(
-        graft.ops.Ngrams.topNgrams(df, idCol,
-          options.getOrElse("text_column", "text").toString,
-          n = options.get("n").map(_.toString.toDouble.toInt).getOrElse(2),
-          k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(100)))
+        graft.ops.Ngrams.topNgrams(df, idCol, str("text_column", "text"),
+          n = int("n", 2), k = int("k", 100)))
     } yield out
 }
 
@@ -1462,30 +1324,26 @@ class FuzzyPairsPlugin(options: Map[String, Any], configDir: Path, label: String
     with graft.core.MultiStreamTransformPlugin {
   def name: String = "fuzzy_pairs"
 
-  private def maxDistance: Int =
-    options.get("max_distance").map(_.toString.toDouble.toInt).getOrElse(2)
-  private def maxBlock: Int =
-    options.get("max_block").map(_.toString.toDouble.toInt).getOrElse(0)
-
   def executeWith(df: DataFrame,
                   streams: Map[String, Either[Throwable, DataFrame]])
       : Either[Throwable, DataFrame] =
     for {
       idCol <- requiredString("id_column")
       strCol <- requiredString("string_column")
-      out <- options.get("reference_label").map(_.toString) match {
+      refLabel <- graft.core.Errors.safe(str("reference_label"))
+      out <- refLabel match {
         case None => graft.core.Errors.safe(
           graft.ops.FuzzyJoin.selfFuzzyPairs(df, idCol, strCol,
-            maxDistance = maxDistance, maxBlock = maxBlock))
+            maxDistance = int("max_distance", 2), maxBlock = int("max_block", 0)))
         case Some(rl) =>
           for {
             ref <- streams.getOrElse(rl, Left(new NoSuchElementException(
               s"No input data with label '$rl' for fuzzy_pairs plugin")))
             out <- graft.core.Errors.safe(
               graft.ops.FuzzyJoin.fuzzyMatch(df, ref, idCol, strCol,
-                options.getOrElse("reference_id_column", idCol).toString,
-                options.getOrElse("reference_string_column", strCol).toString,
-                maxDistance = maxDistance, maxBlock = maxBlock))
+                str("reference_id_column", idCol),
+                str("reference_string_column", strCol),
+                maxDistance = int("max_distance", 2), maxBlock = int("max_block", 0)))
           } yield out
       }
     } yield out
@@ -1543,12 +1401,11 @@ class AsOfJoinPlugin(options: Map[String, Any], configDir: Path, label: String)
       on <- stringList("on")
       lt <- requiredString("left_time")
       rt <- requiredString("right_time")
-      how = options.get("how").map(_.toString).getOrElse("inner")
       _ <- collision(df.columns.toSeq, right.columns.toSeq, on)
       out <- graft.core.Errors.safe(
         graft.ops.AsOfJoin.asOf(df, right, on, lt, rt,
-          tieBreak = options.get("tie_column").map(_.toString),
-          joinType = how))
+          tieBreak = str("tie_column"),
+          joinType = str("how", "inner")))
     } yield out
 
   /** Output = left columns + right payload: a shared non-key name
@@ -1581,7 +1438,8 @@ class ScdPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       keys <- stringList("key_columns")
       order <- stringList("order_columns")
-      out <- options.getOrElse("mode", "scd2").toString match {
+      mode <- graft.core.Errors.safe(str("mode", "scd2"))
+      out <- mode match {
         case "latest" => graft.core.Errors.safe(
           graft.ops.Scd.latest(df, keys, order))
         case "scd2" =>
@@ -1590,12 +1448,9 @@ class ScdPlugin(options: Map[String, Any], configDir: Path, label: String)
             validFrom <- requiredString("valid_from_column")
             built <- graft.core.Errors.safe {
               val scd = graft.ops.Scd.scd2(df, keys, attrs, order, validFrom)
-              options.get("as_of") match {
-                case Some(t) => graft.ops.Scd.asOf(scd,
-                  org.apache.spark.sql.functions.lit(t.toString)
-                    .cast(scd.schema("valid_from").dataType))
-                case None => scd
-              }
+              str("as_of").fold(scd)(t => graft.ops.Scd.asOf(scd,
+                org.apache.spark.sql.functions.lit(t)
+                  .cast(scd.schema("valid_from").dataType)))
             }
           } yield built
         case other => Left(new PluginExecutionError(
@@ -1631,32 +1486,24 @@ class GraphPlugin(options: Map[String, Any], configDir: Path, label: String)
         method match {
           case "pagerank" =>
             graft.ops.Graph.pagerank(df, src, dst,
-              iterations = options.get("iterations")
-                .map(_.toString.toDouble.toInt).getOrElse(5),
-              damping = options.get("damping")
-                .map(_.toString.toDouble).getOrElse(0.85),
-              checkpointInterval = options.get("checkpoint_interval")
-                .map(_.toString.toDouble.toInt).getOrElse(1),
+              iterations = int("iterations", 5),
+              damping = num("damping", 0.85),
+              checkpointInterval = int("checkpoint_interval", 1),
               // tol > 0 enables L1-delta convergence early-exit;
               // default 0 keeps exact fixed-iteration semantics
-              tol = options.get("tol")
-                .map(_.toString.toDouble).getOrElse(0.0),
+              tol = num("tol", 0.0),
               // >1 spreads hub sources across salt buckets (the
               // cached edge side is unreachable by AQE's skew split)
-              saltBuckets = options.get("salt_buckets")
-                .map(_.toString.toDouble.toInt).getOrElse(1))
+              saltBuckets = int("salt_buckets", 1))
           case "degrees" => graft.ops.Graph.degrees(df, src, dst)
           case "triangles" => graft.ops.Graph.triangles(df, src, dst,
-            saltBuckets = options.get("salt_buckets")
-              .map(_.toString.toDouble.toInt).getOrElse(1),
+            saltBuckets = int("salt_buckets", 1),
             // scratch control: 0 = auto (engage when the projected
             // Bloom-pruned wedge shuffle exceeds scratch_budget_mb),
             // 1 = one-shot, >= 2 = that many apex-slice batches
-            wedgeBatches = options.get("wedge_batches")
-              .map(_.toString.toDouble.toInt).getOrElse(0),
-            scratchBudgetBytes = options.get("scratch_budget_mb")
-              .map(v => (v.toString.toDouble * (1L << 20)).toLong)
-              .getOrElse(16L << 30))
+            wedgeBatches = int("wedge_batches", 0),
+            scratchBudgetBytes = num("scratch_budget_mb").fold(16L << 30)(mb =>
+              (mb * (1L << 20)).toLong))
           case "components" =>
             // connected components of the (undirected) edge list to
             // the min member id; algorithm = "alternating" (default,
@@ -1671,10 +1518,8 @@ class GraphPlugin(options: Map[String, Any], configDir: Path, label: String)
               org.apache.spark.sql.functions.col(src).as("id_a"),
               org.apache.spark.sql.functions.col(dst).as("id_b"))
             graft.ops.Dedup.clusterPairs(nodes, "node", pairs,
-              maxIter = options.get("max_iter")
-                .map(_.toString.toDouble.toInt).getOrElse(20),
-              algorithm = options.get("algorithm")
-                .map(_.toString).getOrElse("alternating"))
+              maxIter = int("max_iter", 20),
+              algorithm = str("algorithm", "alternating"))
           case other => throw new PluginExecutionError(
             s"Unknown graph method: '$other'")
         }
@@ -1721,7 +1566,7 @@ class TextAnalysisPlugin(options: Map[String, Any], configDir: Path, label: Stri
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe(
-      Text.analyze(df, options.getOrElse("text_column", "text").toString))
+      Text.analyze(df, str("text_column", "text")))
 }
 
 /** Config-driven multinomial Naive Bayes classifier
@@ -1744,14 +1589,11 @@ class ClassifyNbPlugin(options: Map[String, Any], configDir: Path, label: String
       labelCol <- requiredString("label_column")
       out <- graft.core.Errors.safe {
         import org.apache.spark.sql.functions.expr
-        val tc = options.getOrElse("text_column", "text").toString
-        val trainF = options.getOrElse(
-          "train_filter", s"$labelCol IS NOT NULL").toString
-        val predictF = options.getOrElse("predict_filter", "true").toString
+        val trainF = str("train_filter", s"$labelCol IS NOT NULL")
+        val predictF = str("predict_filter", "true")
         graft.ops.NaiveBayes.trainPredict(
           df.filter(expr(trainF)), df.filter(expr(predictF)),
-          idCol, tc, labelCol,
-          options.get("round").map(_.toString.toDouble.toInt).getOrElse(4))
+          idCol, str("text_column", "text"), labelCol, int("round", 4))
       }
     } yield out
 }
@@ -1772,10 +1614,9 @@ class ResamplePlugin(options: Map[String, Any], configDir: Path, label: String)
       keyCol <- requiredString("key_column")
       tsCol <- requiredString("ts_column")
       valueCol <- requiredString("value_column")
-      step <- required("step_seconds")
+      step <- required("step_seconds", OptionKind.long)
       out <- graft.core.Errors.safe(
-        graft.ops.Resample.forwardFill(df, keyCol, tsCol, valueCol,
-          step.toString.toDouble.toLong))
+        graft.ops.Resample.forwardFill(df, keyCol, tsCol, valueCol, step))
     } yield out
 }
 
@@ -1793,24 +1634,14 @@ class ExpectPlugin(options: Map[String, Any], configDir: Path, label: String)
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "expect"
 
-  private def tableOpt(key: String): Map[String, Any] =
-    options.get(key) match {
-      case Some(m: Map[_, _]) => m.map { case (k, v) => k.toString -> v }
-      case Some(other) => throw new PluginExecutionError(
-        s"Option '$key' must be a table, got: $other")
-      case None => Map.empty
-    }
-
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
-      val rowRules = tableOpt("rules").toSeq
-        .map { case (k, v) => k -> v.toString }.sortBy(_._1)
-      val uniqueRules = tableOpt("unique").toSeq.map {
-        case (k, xs: Seq[_]) => k -> xs.map(_.toString)
-        case (k, s) => k -> Seq(s.toString)
-      }.sortBy(_._1)
+      val rowRules = table("rules", OptionKind.string)
+        .getOrElse(Map.empty).toSeq.sortBy(_._1)
+      val uniqueRules = table("unique", OptionKind.strings)
+        .getOrElse(Map.empty).toSeq.sortBy(_._1)
       val report = graft.ops.Expectations.check(df, rowRules, uniqueRules)
-      options.getOrElse("mode", "report").toString match {
+      str("mode", "report") match {
         case "report" => report
         case "gate" =>
           // bounded collect: one row per rule
@@ -1828,7 +1659,7 @@ class ExpectPlugin(options: Map[String, Any], configDir: Path, label: String)
   /** Kept for mode "gate", which runs its checks as a Spark job while
     * the plan is built; the report takes the derived dry run. */
   override def dryRun(schema: StructType): Either[Throwable, StructType] =
-    if (options.getOrElse("mode", "report").toString == "gate") Right(schema)
+    if (str("mode", "report") == "gate") Right(schema)
     else super.dryRun(schema)
 }
 
@@ -1846,8 +1677,8 @@ class HashEmbedPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       idCol <- requiredString("id_column")
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
-        val d = options.get("dim").map(_.toString.toDouble.toInt).getOrElse(64)
+        val tc = str("text_column", "text")
+        val d = int("dim", 64)
         // LEFT join: the op only emits rows with non-empty normalized
         // text, but the plugin's contract (dryRun) is an appended
         // nullable column — empty-text rows keep flowing with a NULL
@@ -1875,7 +1706,7 @@ class FunnelPlugin(options: Map[String, Any], configDir: Path, label: String)
       steps <- stringList("steps")
       out <- graft.core.Errors.safe(
         graft.ops.Funnel.depth(df, keyCol, tsCol, tyCol, steps,
-          options.get("within_seconds").map(_.toString.toDouble.toLong)))
+          long("within_seconds")))
     } yield out
 }
 
@@ -1892,10 +1723,9 @@ class CohortsPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       keyCol <- requiredString("key_column")
       tsCol <- requiredString("ts_column")
-      p <- required("period_seconds")
+      p <- required("period_seconds", OptionKind.long)
       out <- graft.core.Errors.safe(
-        graft.ops.Cohorts.retention(df, keyCol, tsCol,
-          p.toString.toDouble.toLong))
+        graft.ops.Cohorts.retention(df, keyCol, tsCol, p))
     } yield out
 }
 
@@ -1921,11 +1751,8 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "url"
 
   private def pslRules(): Either[Throwable, graft.ops.Psl.Rules] =
-    options.get("psl_file") match {
-      case None => Right(graft.ops.Psl.default)
-      case Some(p) => graft.core.Errors.safe(
-        graft.ops.Psl.load(resolvePath(p.toString).toString))
-    }
+    graft.core.Errors.safe(str("psl_file").fold(graft.ops.Psl.default)(p =>
+      graft.ops.Psl.load(resolvePath(p).toString)))
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
@@ -1939,10 +1766,9 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
         case "cap_per_domain" =>
           for {
             idCol <- requiredString("id_column")
-            cap <- required("cap")
+            cap <- required("cap", OptionKind.int)
             out <- graft.core.Errors.safe(
-              graft.ops.Urls.capPerDomain(df, urlCol, idCol,
-                cap.toString.toDouble.toInt, rules))
+              graft.ops.Urls.capPerDomain(df, urlCol, idCol, cap, rules))
           } yield out
         case other => Left(new PluginExecutionError(
           s"Unknown url method: '$other' (expected parse | cap_per_domain)"))

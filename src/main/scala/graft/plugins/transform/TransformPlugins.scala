@@ -8,28 +8,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Errors, GraftError, MultiStreamTransformPlugin,
-  PluginExecutionError, SchemaValidationError, TransformPlugin}
+  OptionKind, PluginExecutionError, SchemaValidationError, TransformPlugin}
 
 /** Shared plumbing for transform plugins. */
 abstract class BaseTransformPlugin(val options: Map[String, Any],
                                    val configDir: Path,
                                    override val label: String)
     extends TransformPlugin {
-
-  protected def required(key: String): Either[Throwable, Any] =
-    options.get(key).toRight(
-      new PluginExecutionError(s"Option '$key' is required"))
-
-  protected def requiredString(key: String): Either[Throwable, String] =
-    required(key).map(_.toString)
-
-  protected def stringList(key: String): Either[Throwable, Seq[String]] =
-    required(key).flatMap {
-      case xs: Seq[_] => Right(xs.map(_.toString))
-      case s: String => Right(Seq(s))
-      case other => Left(new PluginExecutionError(
-        s"Option '$key' must be a list of strings, got: $other"))
-    }
 
   /** The dry run `check` uses: `execute` (or `executeWith`, each
     * labeled schema standing in as a zero-row frame) analysed over a
@@ -84,13 +69,9 @@ class ColumnMultiplierPlugin(options: Map[String, Any], configDir: Path, label: 
 
   private def opts(): Either[Throwable, (String, Double)] =
     for {
-      c <- options.get("column_name").toRight(
-        new PluginExecutionError("Option 'column_name' is required"))
-      m <- options.get("multiplier").toRight(
-        new PluginExecutionError("Option 'multiplier' is required"))
-      mv <- Errors.safe(m.toString.toDouble).left.map(_ =>
-        new PluginExecutionError(s"Option 'multiplier' must be numeric, got: $m"))
-    } yield (c.toString, mv)
+      c <- requiredString("column_name")
+      m <- required("multiplier", OptionKind.double)
+    } yield (c, m)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     opts().flatMap { case (c, m) =>
@@ -114,8 +95,7 @@ class ColumnMultiplierPlugin(options: Map[String, Any], configDir: Path, label: 
         // fixed-width contract; `preserve_dtype = false` opts back
         // into the widen-to-long/double behavior for pipelines whose
         // values genuinely outgrow the column's type.
-        val preserve = options.get("preserve_dtype")
-          .forall(_.toString.toBoolean)
+        val preserve = flag("preserve_dtype", true)
         val out =
           if (!preserve ||
               orig.isInstanceOf[org.apache.spark.sql.types.DecimalType]) prod
@@ -218,12 +198,7 @@ class RenamePlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "rename"
 
   private def mapping(): Either[Throwable, Map[String, String]] =
-    required("mapping").flatMap {
-      case m: Map[_, _] =>
-        Right(m.asInstanceOf[Map[String, Any]].map { case (k, v) => k -> v.toString })
-      case other => Left(new PluginExecutionError(
-        s"Option 'mapping' must be a table of old = \"new\" pairs, got: $other"))
-    }
+    required("mapping", OptionKind.tableOf(OptionKind.string))
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     mapping().flatMap(m => Errors.safe(df.withColumnsRenamed(m)))
@@ -257,14 +232,11 @@ class GroupByAggPlugin(options: Map[String, Any], configDir: Path, label: String
     * (docs/plugin_development.md:1220-1227) `agg_columns` +
     * `agg_fn` → one `fn(col) AS col_fn` per column. */
   private def aggExprs(): Either[Throwable, Seq[String]] =
-    options.get("aggregations") match {
-      case Some(_) => stringList("aggregations")
-      case None =>
-        for {
-          cols <- stringList("agg_columns")
-          fn = options.get("agg_fn").map(_.toString).getOrElse("sum")
-        } yield cols.map(c => s"$fn($c) AS ${c}_$fn")
-    }
+    if (options.contains("aggregations")) stringList("aggregations")
+    else for {
+      cols <- stringList("agg_columns")
+      fn = str("agg_fn", "sum")
+    } yield cols.map(c => s"$fn($c) AS ${c}_$fn")
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
@@ -303,11 +275,10 @@ class JoinPlugin(options: Map[String, Any], configDir: Path, label: String)
       right <- streams.getOrElse(rl, Left(new NoSuchElementException(
         s"No input data with label '$rl' for join plugin")))
       on <- stringList("on")
-      how = options.get("how").map(_.toString).getOrElse("inner")
       out <- Errors.safe {
-        val r = if (options.get("broadcast").exists(_.toString.toBoolean))
+        val r = if (flag("broadcast", false))
           org.apache.spark.sql.functions.broadcast(right) else right
-        df.join(r, on, how)
+        df.join(r, on, str("how", "inner"))
       }
     } yield out
 }
@@ -321,14 +292,13 @@ class SortPlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "sort"
 
   private def sortCols(): Either[Throwable, Seq[Column]] =
-    stringList("by").map { bys =>
-      val desc: Seq[Boolean] = options.get("descending") match {
-        case Some(b: Boolean) => Seq.fill(bys.size)(b)
-        case Some(xs: Seq[_]) => xs.map(_.toString.toBoolean)
-        case Some(other) => Seq.fill(bys.size)(other.toString.toBoolean)
+    stringList("by").flatMap { bys =>
+      Errors.safe(opt("descending", OptionKind.booleans) match {
+        case Some(Seq(d)) => Seq.fill(bys.size)(d)
+        case Some(ds) => ds
         case None => Seq.fill(bys.size)(false)
-      }
-      bys.zip(desc).map { case (c, d) => if (d) col(c).desc else col(c).asc }
+      }).map(desc =>
+        bys.zip(desc).map { case (c, d) => if (d) col(c).desc else col(c).asc })
     }
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
@@ -346,10 +316,9 @@ class WhenThenPlugin(options: Map[String, Any], configDir: Path, label: String)
       c <- requiredString("column")
       cond <- requiredString("when")
       thenE <- requiredString("then")
-      otherE = options.get("otherwise").map(_.toString)
       out <- Errors.safe {
         val base = when(expr(cond), expr(thenE))
-        df.withColumn(c, otherE.fold(base)(o => base.otherwise(expr(o))))
+        df.withColumn(c, str("otherwise").fold(base)(o => base.otherwise(expr(o))))
       }
     } yield out
 }
@@ -361,11 +330,7 @@ class DistinctPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     Errors.safe {
-      options.get("columns") match {
-        case Some(xs: Seq[_]) => df.dropDuplicates(xs.map(_.toString))
-        case Some(s) => df.dropDuplicates(Seq(s.toString))
-        case None => df.distinct()
-      }
+      strs("columns").fold(df.distinct())(df.dropDuplicates)
     }
 }
 
@@ -375,8 +340,7 @@ class LimitPlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "limit"
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    required("n").flatMap(n =>
-      Errors.safe(df.limit(n.toString.toDouble.toInt)))
+    required("n", OptionKind.int).flatMap(n => Errors.safe(df.limit(n)))
 }
 
 /** Union with another labeled stream (by name, allowing missing
@@ -394,10 +358,9 @@ class UnionPlugin(options: Map[String, Any], configDir: Path, label: String)
       right <- streams.getOrElse(rl, Left(new NoSuchElementException(
         s"No input data with label '$rl' for union plugin")))
       out <- Errors.safe {
-        if (options.get("by_name").exists(_.toString.toBoolean))
+        if (flag("by_name", false))
           df.unionByName(right,
-            allowMissingColumns =
-              options.get("allow_missing_columns").exists(_.toString.toBoolean))
+            allowMissingColumns = flag("allow_missing_columns", false))
         else df.union(right)
       }
     } yield out

@@ -108,6 +108,18 @@ class ConfigSpec extends AnyFunSuite {
     assert(cfg2.pipelineOptions.isEmpty)
   }
 
+  test("a non-boolean persist_multi_output fails validation, naming the key") {
+    val tmp = Files.createTempFile("popts", ".toml")
+    Files.writeString(tmp, valid + "\n[pipeline]\npersist_multi_output = \"yes\"\n")
+    val err = Config.loadConfig(tmp).left.toOption.get
+    assert(err.isInstanceOf[ConfigLoadError])
+    assert(err.getMessage.contains("persist_multi_output must be a boolean"))
+
+    Files.writeString(tmp, valid + "\n[pipeline]\npersist_multi_output = false\n")
+    assert(!Config.loadConfig(tmp).fold(e => fail(e.getMessage), identity)
+      .persistMultiOutput)
+  }
+
   test("TOML subset: scalars, arrays, comments, quoted strings") {
     val tree = parse(
       """a = 1

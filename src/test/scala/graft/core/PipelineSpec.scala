@@ -63,6 +63,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(trace.toString == "p1") // p2 never ran
   }
 
+  test("a plugin call that throws comes back as a Left with its exception") {
+    class Throwing extends Dummy("thrower") {
+      override def execute(df: DataFrame): Either[Throwable, DataFrame] =
+        throw new IllegalStateException("thrower blew up")
+      override def dryRun(schema: StructType): Either[Throwable, StructType] =
+        throw new IllegalStateException("thrower blew up dry")
+    }
+    val input = new InputPlugin {
+      val name = "in"; val options: Map[String, Any] = Map.empty
+      val configDir: Path = dir
+      def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
+        Right(frame(Seq(1)))
+    }
+    val sink = new OutputPlugin {
+      val name = "out"; val options: Map[String, Any] = Map.empty
+      val configDir: Path = dir
+      def execute(df: DataFrame): Either[Throwable, Unit] = Right(())
+      def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
+    }
+    val run = Pipeline.runPipeline(Seq(input), Seq(new Throwing), Seq(sink))
+    assert(run.left.toOption.get.isInstanceOf[IllegalStateException])
+    assert(run.left.toOption.get.getMessage == "thrower blew up")
+    val check = Pipeline.runDryRunPipeline(Seq(input), Seq(new Throwing), Seq(sink))
+    assert(check.left.toOption.get.getMessage == "thrower blew up dry")
+  }
+
   test("labeled routing: missing label STORES failure (pipeline continues)") {
     val data: Pipeline.LabeledDataMap = Map("default" -> Right(frame(Seq(1))))
     val out = Pipeline.executeLabeledTransformChain(data,

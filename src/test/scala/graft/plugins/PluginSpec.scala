@@ -409,6 +409,22 @@ class PluginSpec extends AnyFunSuite {
     assert(rows(3L) == ("third unique", 1L))
   }
 
+  test("chunk plugin: an integer option given as a whole float runs") {
+    val df = Seq((1L, (1 to 1200).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
+    val out = new ChunkPlugin(Map("id_column" -> "doc_id", "size" -> 512.0), dir, "default")
+      .execute(df).fold(e => fail(e.getMessage), identity)
+    assert(out.count() == 3) // 1200 tokens in 512-token windows
+  }
+
+  test("graph plugin: a fractional iterations fails, naming the option") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
+    val err = new GraphPlugin(Map("method" -> "pagerank", "src_column" -> "src",
+        "dst_column" -> "dst", "iterations" -> 5.5), dir, "default")
+      .execute(edges).left.toOption.get
+    assert(err.isInstanceOf[graft.core.PluginExecutionError])
+    assert(err.getMessage.contains("graph") && err.getMessage.contains("'iterations'"))
+  }
+
   test("sample plugin: mix_weights downsamples to a target mixture") {
     val df = ((0L until 100L).map(i => (i, "web")) ++
       (100L until 200L).map(i => (i, "code"))).toDF("doc_id", "src")
