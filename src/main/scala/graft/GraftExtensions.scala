@@ -52,6 +52,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // spelling is rewritten onto that operator (conservatively — see
     // IntervalJoinRewrite's eligibility list)
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
+    // the plan fence over expensive derived columns: planned as its
+    // child, and crossed only by filters on columns it does not derive
+    ext.injectPlannerStrategy(_ => graft.plans.FenceStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.FencePushdown)
 
     def inject(name: String, n: Int, usage: String)(
         build: Seq[Expression] => Expression): Unit =

@@ -16,8 +16,7 @@ object Verify {
     // to the named queries (dev loop); the driver always passes 2.
     val sfDir = args(0); val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val spark = graft.core.Session.getOrCreate(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = graft.core.Session.getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.cacheInputs = true
     val names = SparkEntry.queries.keys

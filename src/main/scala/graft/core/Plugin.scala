@@ -23,7 +23,10 @@ import org.apache.spark.sql.types.StructType
   * Those whose result re-reads the input — dedup `minhash_clustered*`,
   * sample `mix_*` and `split_leakage_safe` with `pair_method =
   * "minhash"` — compute it once through [[graft.ops.Lineage.once]],
-  * so neither their jobs nor the sink re-run the upstream chain.
+  * so neither their jobs nor the sink re-run the upstream chain. A
+  * plugin that derives a column from a regex chain or a per-row kernel
+  * returns its frame through [[graft.ops.Lineage.fence]], so a later
+  * filter on that column does not copy the derivation into itself.
   *
   * Options are read through the accessors below, never from `options`
   * by hand, so every plugin parses a value of one kind the same way

@@ -34,6 +34,14 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
+  /** The local core count from the value of `SPARK_GRAFT_CPUS`: the
+    * processors this JVM may use when it is unset; anything but a
+    * positive integer fails, naming the variable. */
+  private[core] def coresFrom(value: Option[String]): Int =
+    value.fold(Runtime.getRuntime.availableProcessors)(v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
+
   /** Returns the running session with the runtime SQL [[settings]] set
     * on it (Spark cannot change the static ones once a session runs),
     * and its shuffle partition count and log level left as its creator
@@ -43,7 +51,7 @@ object Session {
     * `SPARK_MASTER`, or on `local[cores]` when that is unset, starting
     * shuffles at `cores` partitions (AQE coalesces from there). */
   def getOrCreate(appName: String = "graft",
-                  cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+                  cores: Int = coresFrom(sys.env.get("SPARK_GRAFT_CPUS")))
       : SparkSession = {
     val builder = SparkSession.builder()
       .config(settings)

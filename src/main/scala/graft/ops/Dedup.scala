@@ -1026,14 +1026,19 @@ object Dedup {
   }
 
   /** The in-plan saturation guard (class doc of
-    * [[embeddingCosinePairs]]): attach a 1-row broadcast scalar that
-    * re-aggregates the bucket-count table and raises a descriptive
-    * error when > 50% of corpus rows sit in over-cap buckets — the
-    * regime where overCap="drop" stops being a skew cap and becomes
-    * a silent recall collapse. The guard column is REFERENCED by a
-    * filter (assert_true yields NULL on success), so column pruning
-    * cannot optimize the assertion away; the cross join is a 1-row
-    * attach, the documented scalar-attach shape. */
+    * [[embeddingCosinePairs]]): a 1-row aggregate over the bucket-count
+    * table that raises a descriptive error when > 50% of corpus rows
+    * sit in over-cap buckets — the regime where overCap="drop" stops
+    * being a skew cap and becomes a silent recall collapse.
+    *
+    * The assertion is a union branch of its own that yields no row
+    * when the check passes (assert_true is NULL on success and the
+    * branch keeps only non-NULL guards). Attached to the pairs by a
+    * join, it would be dropped with them whenever AQE finds the capped
+    * candidate side empty, which is the saturated case itself; a union
+    * branch over the (non-empty) bucket counts must be evaluated. The
+    * placeholder columns are non-NULL literals, so the output schema
+    * keeps `out`'s nullability. */
   private def withSaturationGuard(out: DataFrame, counts: DataFrame,
                                   nCol: String, maxBucket: Int,
                                   op: String, escape: String): DataFrame = {
@@ -1046,8 +1051,8 @@ object Dedup {
           lit(s"% of rows in buckets over maxBucket=$maxBucket) - " +
             s"overCap=\"drop\" would silently discard most candidate " +
             s"mass; $escape"))).as("_sat_guard"))
-    out.crossJoin(broadcast(guard))
-      .filter(col("_sat_guard").isNull).drop("_sat_guard")
+    out.unionByName(guard.filter(col("_sat_guard").isNotNull)
+      .select(out.schema.map(f => lit(0).cast(f.dataType).as(f.name)): _*))
   }
 
   /** Multi-table (banded) variant of [[embeddingCosinePairs]] — the

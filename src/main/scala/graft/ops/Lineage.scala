@@ -4,10 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftshim.DatasetShim
+
+import graft.plans.Fence
 
 /** Lineage control for the ops that run Spark actions while they
   * build their plan (component rounds, per-source mix counts) over an
-  * input their returned frame reads again. */
+  * input their returned frame reads again, and for the ops whose
+  * derived columns must not be copied into later filters. */
 object Lineage {
 
   /** `df`, computed at most once: a lazy local checkpoint. The op's
@@ -34,4 +38,18 @@ object Lineage {
       case _: LogicalRDD | _: InMemoryRelation | _: LocalRelation => df
       case _ => df.localCheckpoint(eager = false)
     }
+
+  /** `df` behind a plan fence ([[graft.plans.Fence]]): a later filter
+    * on a column `df` derives runs over the computed column instead of
+    * a copy of its expression, so each derivation is evaluated once
+    * per row. Filters on the columns `df` passes through unchanged
+    * still move below it, down to the scan. No job, no stored copy:
+    * the fence plans as its child.
+    *
+    * For an op that derives a column by a regex chain or a per-row
+    * kernel that a later filter may read. A streaming frame is
+    * returned as is. */
+  def fence(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else DatasetShim.ofRows(df.sparkSession, Fence(DatasetShim.analyzed(df)))
 }

@@ -128,7 +128,9 @@ object Text {
     * metrics come from ONE per-row kernel pass
     * ([[graft.expressions.GopherMetrics]] — the interpreted
     * HOF formulation it replaces measured ~5 ms/doc); the gates stay
-    * cheap codegen'd comparisons so thresholds remain configurable. */
+    * cheap codegen'd comparisons so thresholds remain configurable.
+    * Returned behind [[Lineage.fence]]: a filter on the flags reads
+    * them, not eight copies of the kernel each. */
   def withGopherFlags(df: DataFrame, textCol: String,
                       t: GopherThresholds = GopherThresholds()): DataFrame = {
     val txt = col(textCol)
@@ -168,9 +170,9 @@ object Text {
     val flags = Seq("flag_word_count", "flag_word_len", "flag_symbol_ratio",
       "flag_bullet_lines", "flag_ellipsis_lines", "flag_alpha_words",
       "flag_stopwords", "flag_dup_lines")
-    flagged
+    Lineage.fence(flagged
       .withColumn("gopher_pass", flags.map(col).reduce(_ && _))
-      .drop("_gm")
+      .drop("_gm"))
   }
 
   /** Keep only documents passing every Gopher rule (NULL text is
@@ -199,7 +201,9 @@ object Text {
     * retained text), and the page gate `c4_pass`. NULL text yields
     * NULL outputs. Pure per-row array/regex expressions — shuffle-free
     * and reproducible in any engine with RE2-class regexes and list
-    * lambdas (the oracle runs the identical rules in DuckDB). */
+    * lambdas (the oracle runs the identical rules in DuckDB). Returned
+    * behind [[Lineage.fence]], so the `c4_pass` filter does not copy
+    * the line split and regexes into its condition. */
   def withC4Flags(df: DataFrame, textCol: String,
                   t: C4Thresholds = C4Thresholds()): DataFrame = {
     val txt = col(textCol)
@@ -216,7 +220,7 @@ object Text {
       (length(clean) - length(regexp_replace(clean, "[.!?]", ""))).cast("long")
     def gate(c: Column, t: String = "boolean"): Column =
       when(isNullT, lit(null).cast(t)).otherwise(c)
-    staged
+    Lineage.fence(staged
       .withColumn("clean_text", when(isNullT, lit(null).cast("string"))
         .otherwise(clean))
       .withColumn("n_lines", gate(size(lines).cast("long"), "long"))
@@ -226,7 +230,7 @@ object Text {
         !lower(txt).contains("lorem ipsum") &&
           !txt.contains("{") &&
           nSentences >= t.minSentences))
-      .drop("_kept", "_clean")
+      .drop("_kept", "_clean"))
   }
 
   /** C4 page filter: keep passing pages with `textCol` REPLACED by the
@@ -416,10 +420,13 @@ object Text {
       .filter(col("blocked_ratio") <= maxRatio)
       .drop("n_tokens_blocked", "blocked_ratio")
 
+  /** Token counts, quality metrics, language guess and fingerprint of
+    * `textCol`, behind [[Lineage.fence]]: a quality gate filters on
+    * the computed metrics instead of copies of their regexes. */
   def analyze(df: DataFrame, textCol: String): DataFrame = {
     val t = col(textCol)
     val staged = withLangId(withQualityMetrics(df, textCol), textCol)
-    staged
+    Lineage.fence(staged
       .withColumn("n_tokens", tokenCount(t))
       .withColumn("n_tokens_bpe", tokenCountBpe(t))
       .withColumn("punct_ratio", round(col("_praw"), 4))
@@ -429,7 +436,7 @@ object Text {
       .withColumn("char_entropy",
         round(graft.expressions.CharEntropy.char_entropy(t), 4))
       .withColumn("fingerprint", fingerprint(t))
-      .drop("_len", "_praw", "_sraw", "_mraw")
+      .drop("_len", "_praw", "_sraw", "_mraw"))
   }
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken —

@@ -290,7 +290,9 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
 
 /** Config-driven PII redaction ([[graft.ops.Text.redactPii]]):
   * rewrites text_column in place (or into output_column) and
-  * optionally attaches per-category counts. */
+  * optionally attaches per-category counts, behind
+  * [[graft.ops.Lineage.fence]] so a later filter on the text does not
+  * copy the regex chain. */
 class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "redact_pii"
@@ -300,11 +302,12 @@ class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
       import org.apache.spark.sql.functions.col
       val tc = str("text_column", "text")
       val redacted = df.withColumn(str("output_column", tc), Text.redactPii(col(tc)))
-      if (flag("with_counts", false))
-        Text.piiCounts(col(tc)).foldLeft(redacted) { case (acc, (n, c)) =>
-          acc.withColumn(n, c.cast("long"))
-        }
-      else redacted
+      graft.ops.Lineage.fence(
+        if (flag("with_counts", false))
+          Text.piiCounts(col(tc)).foldLeft(redacted) { case (acc, (n, c)) =>
+            acc.withColumn(n, c.cast("long"))
+          }
+        else redacted)
     }
 }
 

@@ -284,7 +284,8 @@ class JoinPlugin(options: Map[String, Any], configDir: Path, label: String)
 }
 
 /** Sort (ref docs/plugin_development.md:1527-1528). `by` is a list of
-  * column names; `descending` a matching bool list (or single bool).
+  * column names; `descending` a matching bool list (or single bool);
+  * a list of another length fails, as Polars' `sort` does.
   * This is a global sort (range-partitioned shuffle) — at scale prefer
   * sortWithinPartitions unless total order is truly required. */
 class SortPlugin(options: Map[String, Any], configDir: Path, label: String)
@@ -292,14 +293,17 @@ class SortPlugin(options: Map[String, Any], configDir: Path, label: String)
   def name: String = "sort"
 
   private def sortCols(): Either[Throwable, Seq[Column]] =
-    stringList("by").flatMap { bys =>
-      Errors.safe(opt("descending", OptionKind.booleans) match {
+    for {
+      bys <- stringList("by")
+      desc <- Errors.safe(opt("descending", OptionKind.booleans) match {
         case Some(Seq(d)) => Seq.fill(bys.size)(d)
         case Some(ds) => ds
         case None => Seq.fill(bys.size)(false)
-      }).map(desc =>
-        bys.zip(desc).map { case (c, d) => if (d) col(c).desc else col(c).asc })
-    }
+      })
+      _ <- Either.cond(desc.size == bys.size, (),
+        new PluginExecutionError(s"$name: 'descending' has ${desc.size} " +
+          s"entries but 'by' has ${bys.size}; give one flag or one per column"))
+    } yield bys.zip(desc).map { case (c, d) => if (d) col(c).desc else col(c).asc }
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     sortCols().flatMap(cs => Errors.safe(df.orderBy(cs: _*)))

@@ -7,18 +7,22 @@ import graft.ops.Similarity
 
 /** Recall@k measurement harness for the ANN operators — grid over
   * IVF (nlist, nprobe) and LSH (planes, probe depth) against
-  * brute-force ground truth on the driver's embeddings fixtures.
-  * Prints per-config mean recall and the per-query minimum hits so
-  * oracle-exactness (recall == 1.0 on every query) is visible.
+  * brute-force ground truth on the embeddings of each fixture
+  * directory given. Prints per-config mean recall and the per-query
+  * minimum hits so oracle-exactness (recall == 1.0 on every query) is
+  * visible.
+  * Usage: runMain graft.tools.TuneAnn <sfDir> [sfDir...]
   */
 object TuneAnn {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: TuneAnn <sfDir> [sfDir...]")
     val spark = graft.core.Session.getOrCreate("graft-tune-ann", cores = 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val k = 5
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
+    for (sfDir <- args) {
+      val sf = java.nio.file.Paths.get(sfDir).getFileName
+      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val q = e.filter(col("vec_id") < 10)
       def pairs(df: DataFrame): Set[(Long, Long)] =
         df.select("query_id", "neighbor_id").collect()

@@ -5,14 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity}
 
 /** Offline tuning: measured kmeans SemDeDup recall vs the global
-  * droppable set on the synthetic embeddings fixtures, across sf and
-  * nClusters — sets the dedup_semantic_recall gate floor. Never runs
-  * in a pipeline. */
+  * droppable set on the embeddings of each fixture directory given,
+  * across nClusters — sets the dedup_semantic_recall gate floor. Never
+  * runs in a pipeline.
+  * Usage: runMain graft.tools.TuneSemDeDup <sfDir> [sfDir...] */
 object TuneSemDeDup {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: TuneSemDeDup <sfDir> [sfDir...]")
     val spark = graft.core.Session.getOrCreate("tune-semdedup", cores = 8)
-    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val e = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
+    for (sfDir <- args) {
+      val sf = java.nio.file.Paths.get(sfDir).getFileName
+      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val norm = Similarity.withNormalized(e, "embedding", "v")
         .select(col("vec_id"), col("v"))
       val a = norm.select(col("vec_id").as("id_a"), col("v").as("v_a"))

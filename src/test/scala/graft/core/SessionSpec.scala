@@ -34,6 +34,16 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 
+  test("the core count is SPARK_GRAFT_CPUS, else the host's processors") {
+    assert(Session.coresFrom(None) == Runtime.getRuntime.availableProcessors)
+    assert(Session.coresFrom(Some("6")) == 6)
+    for (bad <- Seq("four", "2.5", "0", "")) {
+      val e = intercept[IllegalArgumentException](Session.coresFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("only Session builds a SparkSession in the program sources") {
     val root = Paths.get("src/main/scala")
     val walk = Files.walk(root)

@@ -512,6 +512,17 @@ class OpsSpec extends AnyFunSuite {
         maxBucket = 3).count()
     }
     assert(exB.getMessage.contains("saturated"), exB.getMessage)
+    // every bucket over a cap of 1: the capped base side, the candidate
+    // join and the pairs are all empty at run time, and the guard must
+    // still be evaluated (single-table and banded)
+    for (tables <- Seq(1, 2)) {
+      val exE = intercept[Exception] {
+        Dedup.embeddingCosinePairs(e, "vec_id", "embedding",
+          threshold = 0.3, planes = 3, probeBits = 1, tables = tables,
+          maxBucket = 1).collect()
+      }
+      assert(exE.getMessage.contains("saturated"), s"tables=$tables: ${exE.getMessage}")
+    }
     // star mode keeps collapsing through hubs — no guard, no throw
     Dedup.embeddingCosinePairs(e, "vec_id", "embedding",
       threshold = 0.3, planes = 4, probeBits = 3, maxBucket = 5,

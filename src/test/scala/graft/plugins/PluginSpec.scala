@@ -425,6 +425,22 @@ class PluginSpec extends AnyFunSuite {
     assert(err.getMessage.contains("graph") && err.getMessage.contains("'iterations'"))
   }
 
+  test("sort plugin: a descending list of another length than by fails") {
+    val df = Seq((1L, 2L, 3L), (3L, 2L, 1L)).toDF("a", "b", "c")
+    def sort(desc: Any) =
+      new SortPlugin(Map("by" -> Seq("a", "b", "c"), "descending" -> desc),
+        dir, "default").execute(df)
+    val err = sort(Seq(true, false)).left.toOption.get
+    assert(err.isInstanceOf[graft.core.PluginExecutionError])
+    Seq("sort", "'descending'", "'by'", "2", "3").foreach(s =>
+      assert(err.getMessage.contains(s), err.getMessage))
+    // one flag applies to every column; one per column is taken as is
+    assert(sort(true).fold(e => throw e, identity)
+      .select("a").as[Long].collect().toSeq == Seq(3L, 1L))
+    assert(sort(Seq(false, true, true)).fold(e => throw e, identity)
+      .select("a").as[Long].collect().toSeq == Seq(1L, 3L))
+  }
+
   test("sample plugin: mix_weights downsamples to a target mixture") {
     val df = ((0L until 100L).map(i => (i, "web")) ++
       (100L until 200L).map(i => (i, "code"))).toDF("doc_id", "src")
