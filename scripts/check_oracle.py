@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's t2 correctness gate: for each query
-output written by graft.Verify, run the matching DuckDB oracle SQL on
-the raw testdata tables and compare (columns sorted by name, rows
-sorted, values hashed). Usage: check_oracle.py SFDIR OUTDIR
+"""Local replica of the driver's t2 correctness gate: for each query in
+the oracle_sql.json written by graft.Verify, run its DuckDB oracle SQL
+on the raw testdata tables and compare with the query's output
+(columns sorted by name, rows sorted, values hashed); a query with no
+output fails. Usage: check_oracle.py SFDIR OUTDIR
 
 compare_query/compare_frames are the SINGLE comparator implementation
 — check_oracle_budget.py (the budgeted cross-SF sweep) imports them,
@@ -112,16 +113,18 @@ def main(sfdir: str, outdir: str) -> int:
     with open(f"{outdir}/oracle_sql.json") as f:
         oracles = json.load(f)
 
+    # Walk the queries Verify ran (it writes exactly those into
+    # oracle_sql.json), not the output dirs: a query that threw leaves
+    # no dir, and must fail here rather than go unchecked.
     failures = 0
     import os
-    names = sorted(d for d in os.listdir(outdir)
-                   if os.path.isdir(os.path.join(outdir, d)))
-    for name in names:
-        status, msg = compare_query(con, outdir, name, oracles.get(name))
+    for name in sorted(oracles):
+        if not os.path.isdir(os.path.join(outdir, name)):
+            status, msg = "FAIL", "MISSING-OUTPUT (the query threw in Verify)"
+        else:
+            status, msg = compare_query(con, outdir, name, oracles[name])
         if status == "OK":
             print(f"{name:24s} OK {msg}")
-        elif status == "ROWS-ONLY":
-            print(f"{name:24s} ROWS-ONLY {msg}")
         else:
             print(f"{name:24s} {msg}")
             failures += 1

@@ -31,12 +31,13 @@ def one(args):
 def main(sfdir, outdir, budget, only=()):
     with open(f"{outdir}/oracle_sql.json") as f:
         oracles = json.load(f)
-    available = sorted(d for d in os.listdir(outdir)
-                       if os.path.isdir(os.path.join(outdir, d)))
+    # the queries Verify ran, not the output dirs: a query that threw
+    # has no dir and fails (OUTPUT-READ-ERROR) instead of going unchecked
+    available = sorted(oracles)
     unknown = [n for n in only if n not in available]
     if unknown:
         print(f"UNKNOWN QUERY NAME(S): {','.join(unknown)} — "
-              f"not in {outdir}", file=sys.stderr)
+              f"not in {outdir}/oracle_sql.json", file=sys.stderr)
         return 1
     names = [n for n in available if not only or n in only]
     bad = 0

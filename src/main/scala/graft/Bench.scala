@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.{Landing, Queries}
+
 /** Benchmark main (driver contract): runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and
   * total wall seconds.
@@ -16,57 +18,11 @@ package graft
   */
 object Bench {
 
-  val headline: Seq[String] = Seq(
-    "q_scan_project", "q_filter", "q_with_column", "q_multiplier",
-    "q_groupby_agg", "q_join", "q_join_broadcast", "q_bucket_join",
-    "q_sort", "q_window", "events_session_window", "q_window_suite",
-    "q_set_ops", "q_grouping_sets", "q_array_hof", "q_from_json",
-    "q_agg_stats", "q_date_funcs", "q_json", "q_semi_join", "q_anti_join",
-    "q_having", "q_union", "q_distinct", "q_when_then", "events_window",
-    "events_sessionize", "events_resample", "events_funnel", "events_cohort", "q_range_join", "q_approx_sketch",
-    "q_pipeline_e2e", "q_asof_join", "q_rollup", "q_cube", "q_percentile",
-    "q_tpch_q3", "q_tpch_q5", "q_zorder", "q_hilbert",
-    "q_array_funcs",
-    "dedup_exact", "dedup_fingerprint", "dedup_incremental",
-    "dedup_minhash_pairs",
-    "dedup_simhash_pairs", "dedup_embedding_lsh", "dedup_semantic_kmeans",
-    "dedup_boilerplate",
-    "text_tokens", "text_quality", "text_langid", "text_fingerprint",
-    "text_entropy", "text_vocab", "q_vocab_encode", "q_bpe_encode", "q_split",
-    "q_split_safe", "q_pack_greedy", "q_pack_bpe",
-    "q_chunk_windows", "q_profile",
-    "q_gopher_rules",
-    "text_blocklist", "text_classify_nb", "text_hash_embed",
-    "text_winnow", "dedup_winnow_pairs",
-    "sim_topk_brute", "sim_topk_lsh", "sim_topk_ivf", "sim_topk_ivfpq",
-    "sim_quantize_raw",
-    "multimodal_meta", "q_pivot", "q_unpivot",
-    "dedup_span_stats", "dedup_span_removal", "q_pagerank", "q_scd2",
-    "text_tfidf",
-    "q_sample_weighted",
-    "q_shuffle_shard", "q_url_parse", "q_url_psl", "q_url_domain_cap",
-    "q_dsir_select", "q_dsir_mix", "dedup_ngram_verified",
-    "q_scd1_latest", "q_components", "q_triangles", "q_expectations", "q_snapshot", "q_snapshot_upsert_compact", "text_c4", "text_lm_score",
-    "q_orc_roundtrip", "q_emb_gram", "sim_pca_norm", "text_bm25",
-    "text_top_ngrams", "q_percentile_band", "sim_knn_graph",
-    "sim_knn_components", "sim_mmr", "q_fuzzy_pairs", "q_mix_tokens",
-    "q_mix_temperature",
-    "q_interval_join", "dedup_incr_neardup", "sim_outliers",
-    "q_fuzzy_match", "q_tpch_q7", "q_tpch_q1", "q_tpch_q18",
-    "q_tpch_q4", "q_tpch_q13", "q_tpch_q10", "q_tpch_q14", "q_tpch_q19",
-    "q_tpch_q2", "q_tpch_q21",
-    "q_tpch_q6", "q_tpch_q8", "q_tpch_q9", "q_tpch_q11", "q_tpch_q12",
-    "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q20", "q_tpch_q22",
-    "q_dpp_prune",
-    "multimodal_headers", "multimodal_resize", "multimodal_frames_png",
-    "multimodal_jpeg", "multimodal_audio", "multimodal_video",
-    "dedup_image_phash", "dedup_audio_pairs", "pipeline_multimodal",
-    // ANN scale paths on the clustered fixture (brute = baseline;
-    // recall gated by the oracled sim_recall_knn_clustered)
-    "sim_knn_brute_clustered", "sim_knn_lsh_clustered",
-    "sim_topk_ivf_clustered", "sim_topk_ivfpq_clustered")
+  /** The batch lane: the queries whose record sets `headline`
+    * ([[graft.queries.Query]]). */
+  val headline: Seq[String] = Queries.all.filter(_.headline).map(_.name)
 
-  /** Streaming lane: the oracled stream_* queries, timed end-to-end
+  /** Streaming lane: the stream queries, timed end-to-end
     * (landing-dir setup → AvailableNow micro-batch run → sink).
     * Reported as seconds plus input-rows/s — the throughput figure a
     * streaming regression actually moves — under a separate
@@ -74,39 +30,13 @@ object Bench {
     * rounds. One timed pass each (the JVM is hot from the batch lane;
     * stream runtimes are dominated by fixed micro-batch machinery, so
     * best-of-2 would double the lane's cost for little noise
-    * reduction). */
-  val streamHeadline: Seq[(String, String)] = Seq(
-    "stream_events_window" -> "events",
-    "stream_dedup_fingerprint" -> "documents",
-    "stream_resample" -> "events",
-    "stream_snapshot" -> "documents",
-    "stream_classify" -> "documents",
-    "stream_interval_join" -> "events",
-    "stream_stream_join" -> "events",
-    "stream_sessionize" -> "events",
-    "stream_left_join" -> "events",
-    "stream_upsert" -> "events",
-    // sustained lane: 10-copy landing, so rows/s divides by 10x the
-    // table count (streamInputMultiplier) — the stream numbers that
-    // measure engine/join-state throughput rather than trigger
-    // overhead (the three join queries emit ~100x pairs at 10x
-    // input — matched pairs scale quadratically with stream density)
-    "stream_sustained_window" -> "events",
-    "stream_sustained_interval_join" -> "events",
-    "stream_sustained_stream_join" -> "events",
-    "stream_sustained_left_join" -> "events",
-    "stream_sustained_dedup_fingerprint" -> "documents",
-    "stream_sustained_classify" -> "documents")
-
-  /** Input-rows multiplier per stream query (default 1): the
-    * sustained bench reads an N-copy landing of its table. */
-  val streamInputMultiplier: Map[String, Long] =
-    Map("stream_sustained_window" -> 10L,
-      "stream_sustained_interval_join" -> 10L,
-      "stream_sustained_stream_join" -> 10L,
-      "stream_sustained_left_join" -> 10L,
-      "stream_sustained_dedup_fingerprint" -> 10L,
-      "stream_sustained_classify" -> 10L)
+    * reduction). The sustained queries read a 10-copy landing, so
+    * their rows/s counts 10x the table: those are the stream numbers
+    * that measure engine/join-state throughput rather than trigger
+    * overhead (the three join queries emit ~100x pairs at 10x input —
+    * matched pairs scale quadratically with stream density). */
+  val streamHeadline: Seq[(String, Landing)] =
+    Queries.all.flatMap(q => q.stream.map(q.name -> _))
 
   /** ×10 scale lane (round 13): correctness runs a decade up
     * (CORRECTNESS_sf1), but until now the bench did not, so a
@@ -151,17 +81,13 @@ object Bench {
     "q_triangles" -> ((21.2, 22.6)),
     "text_winnow" -> ((1.4, 2.0)))
 
-  /** Full query inventory: oracled queries + bench-only raw ANN
-    * top-k (kept under their historical names). */
-  private val inventory = SparkEntry.queries ++ SparkEntry.benchOnly
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Session.getOrCreate()
 
     def runIn(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      try inventory(name)(spark, dir)
+      try Queries.byName(name).timedPlan(spark, dir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -178,7 +104,7 @@ object Bench {
     // Each query's generated code is unique, so only running the
     // query itself compiles it; a family representative does not.
     headline.foreach { n =>
-      try inventory(n)(spark, sfDir)
+      try Queries.byName(n).timedPlan(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () /* runOnce reports the failure */ }
     }
@@ -269,16 +195,15 @@ object Bench {
     // Input counts are failure-guarded like every other measurement:
     // a missing table (e.g. a ScaleFixture dir without events) must
     // not discard the completed batch lane.
-    val inputRows: Map[String, Long] = streamHeadline.map(_._2).distinct
+    val inputRows: Map[String, Long] = streamHeadline.map(_._2.table).distinct
       .map(t => t -> (try spark.read.parquet(s"$sfDir/$t.parquet").count()
         catch { case _: Throwable => -1L }))
       .toMap
-    val streamResults = streamHeadline.map { case (name, table) =>
+    val streamResults = streamHeadline.map { case (name, land) =>
       val sec = runOnce(name)
-      val mult = streamInputMultiplier.getOrElse(name, 1L)
       val rps =
-        if (sec > 0 && inputRows(table) >= 0)
-          math.rint(inputRows(table) * mult / sec)
+        if (sec > 0 && inputRows(land.table) >= 0)
+          math.rint(inputRows(land.table) * land.copies / sec)
         else -1.0
       (name, sec, rps)
     }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the driver's DuckDB compare. Ends with one
+  * stderr line naming the queries that threw; the exit code does not
+  * depend on them.
   *
   * Wall-clock hardening (a contended sandbox once timed the driver's
   * gate out to `{}`): input tables are read once and cached
@@ -21,9 +23,10 @@ object Verify {
     SparkEntry.cacheInputs = true
     val names = SparkEntry.queries.keys
       .filter(name => only.isEmpty || only(name)).toSeq.sorted
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "6").toInt
+    val threads = threadsFrom(sys.env.get("SPARK_GRAFT_VERIFY_THREADS"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val done = new java.util.concurrent.CountDownLatch(names.size)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     names.foreach { name =>
       pool.execute { () =>
         val t0 = System.nanoTime()
@@ -36,6 +39,7 @@ object Verify {
             f"${(System.nanoTime() - t0) / 1e9}%.1f s")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed.add(name)
         } finally done.countDown()
       }
     }
@@ -53,9 +57,20 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // only the queries this run built, so a dev-loop subset checks
+    // cleanly and a query that threw reads as a missing output
+    val oracles = SparkEntry.oracleSql
+    val json = names
+      .map(k => s"${q(k)}: ${q(oracles(k))}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val threw = failed.toArray(Array.empty[String]).sorted
+    System.err.println(s"[verify] ${threw.length} of ${names.size} queries " +
+      s"threw: ${threw.mkString(" ")}")
   }
+
+  /** The thread-pool size from the value of
+    * `SPARK_GRAFT_VERIFY_THREADS`, 6 when it is unset. */
+  private[graft] def threadsFrom(value: Option[String]): Int =
+    graft.core.Session.positiveIntFrom("SPARK_GRAFT_VERIFY_THREADS", value, 6)
 }

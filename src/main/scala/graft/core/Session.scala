@@ -34,13 +34,19 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
-  /** The local core count from the value of `SPARK_GRAFT_CPUS`: the
-    * processors this JVM may use when it is unset; anything but a
-    * positive integer fails, naming the variable. */
-  private[core] def coresFrom(value: Option[String]): Int =
-    value.fold(Runtime.getRuntime.availableProcessors)(v =>
+  /** The value of environment variable `name` as a positive integer,
+    * `default` when it is unset; anything else fails, naming the
+    * variable. */
+  private[graft] def positiveIntFrom(name: String, value: Option[String],
+                                     default: => Int): Int =
+    value.fold(default)(v =>
       v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
+        s"$name must be a positive integer, got '$v'")))
+
+  /** The local core count from the value of `SPARK_GRAFT_CPUS`: the
+    * processors this JVM may use when it is unset. */
+  private[core] def coresFrom(value: Option[String]): Int =
+    positiveIntFrom("SPARK_GRAFT_CPUS", value, Runtime.getRuntime.availableProcessors)
 
   /** Returns the running session with the runtime SQL [[settings]] set
     * on it (Spark cannot change the static ones once a session runs),

@@ -213,11 +213,12 @@ object Text {
       size(split(trim(l), "\\s+")) >= t.minLineWords &&
         trim(l).rlike("[.!?\"]$") &&
         !lower(l).contains("javascript")
+    val clean = col("_clean")
     val staged = df.withColumn("_kept", filter(lines, keepLine))
       .withColumn("_clean", array_join(col("_kept"), "\n"))
-    val clean = col("_clean")
-    val nSentences =
-      (length(clean) - length(regexp_replace(clean, "[.!?]", ""))).cast("long")
+      .withColumn("_n_sentences",
+        (length(clean) - length(regexp_replace(clean, "[.!?]", ""))).cast("long"))
+    val nSentences = col("_n_sentences")
     def gate(c: Column, t: String = "boolean"): Column =
       when(isNullT, lit(null).cast(t)).otherwise(c)
     Lineage.fence(staged
@@ -230,7 +231,7 @@ object Text {
         !lower(txt).contains("lorem ipsum") &&
           !txt.contains("{") &&
           nSentences >= t.minSentences))
-      .drop("_kept", "_clean"))
+      .drop("_kept", "_clean", "_n_sentences"))
   }
 
   /** C4 page filter: keep passing pages with `textCol` REPLACED by the

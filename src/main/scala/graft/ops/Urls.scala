@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * All columns are built from codegen'd string expressions
   * (`parse_url`, `split`, array ops) — no UDFs — and every derivation
   * is replayable in ANSI-ish SQL for the oracle (the DuckDB spellings
-  * live next to the q_url_* queries in SparkEntry).
+  * live next to the q_url_* queries in graft.queries.TextQueries).
   *
   * Registered-domain extraction ("example.co.uk" from
   * "blog.example.co.uk") runs the standard Public-Suffix-List

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.queries.Queries
 
 /** Print formatted physical plans for selected queries (plan-quality
   * review: pushdown, pruning, broadcast, partial agg, codegen spans).
@@ -12,10 +12,9 @@ object Explain {
       else Seq("q_filter", "q_groupby_agg", "q_join", "q_join_broadcast",
         "q_semi_join", "q_sort", "dedup_minhash_pairs", "sim_topk_brute")
     val spark = graft.core.Session.getOrCreate("graft-explain")
-    val inventory = SparkEntry.queries ++ SparkEntry.benchOnly
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      inventory(n)(spark, sfDir).explain("formatted")
+      Queries.byName(n).timedPlan(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

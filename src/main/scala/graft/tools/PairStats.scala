@@ -131,7 +131,7 @@ object PairStats {
     }
 
     if (sections("knn")) {
-      // mirror of SparkEntry.clusteredEmb + knnGraph's auto_planes
+      // mirror of queries.Fixtures.clusteredEmb + knnGraph's auto_planes
       val emb = spark.read.parquet(s"${args(0)}/embeddings.parquet")
       val n = emb.count() * 8
       val corpus = graft.ops.SyntheticEmbeddings.mixtureOfGaussians(

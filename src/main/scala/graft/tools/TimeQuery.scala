@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Time arbitrary SparkEntry/benchOnly queries warm (best of 2 after
+/** Time arbitrary queries of the inventory warm (best of 2 after
   * a warmup pass), matching Bench methodology — the dev loop for
   * tuning one query without paying the full headline run.
   * Usage: runMain graft.tools.TimeQuery <sfDir> <query> [query...] */
@@ -10,7 +10,6 @@ object TimeQuery {
     val sfDir = args.head
     val names = args.tail.toSeq
     val spark = graft.core.Session.getOrCreate("graft-time-query")
-    val inventory = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
     // Each timed run carries its own host-health window (HostMeter):
     // the seconds column stays column 2 (scripts awk on it), the
     // steal/iowait tail tells a reader whether an elevated number was
@@ -18,7 +17,7 @@ object TimeQuery {
     def once(n: String): (Double, String) = {
       val close = HostMeter.start()
       val t0 = System.nanoTime()
-      inventory(n)(spark, sfDir)
+      graft.queries.Queries.byName(n).timedPlan(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       val host = HostMeter.describe(close())

@@ -41,7 +41,13 @@ class SessionSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](Session.coresFrom(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
         e.getMessage.contains(s"'$bad'"), e.getMessage)
+      // Verify's pool size goes through the same parse
+      val v = intercept[IllegalArgumentException](graft.Verify.threadsFrom(Some(bad)))
+      assert(v.getMessage.contains("SPARK_GRAFT_VERIFY_THREADS") &&
+        v.getMessage.contains(s"'$bad'"), v.getMessage)
     }
+    assert(graft.Verify.threadsFrom(None) == 6)
+    assert(graft.Verify.threadsFrom(Some("2")) == 2)
   }
 
   test("only Session builds a SparkSession in the program sources") {

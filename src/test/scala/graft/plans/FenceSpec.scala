@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.functions.{col, concat, lit, xxhash64}
 import org.apache.spark.sql.graftshim.DatasetShim
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,6 +65,14 @@ class FenceSpec extends AnyFunSuite {
     assert(!plan.collect { case Filter(c, _) => c }.exists(_.exists(isFenced)), plan)
     val (gm, re) = copies(unfenced(fenced).queryExecution.optimizedPlan)
     assert(gm > 1 && re > 7, s"unfenced copies: $gm gopher_metrics, $re regexp_replace")
+  }
+
+  test("C4 flags evaluate the sentence count once") {
+    val docs = spark.range(3).select(concat(
+      lit("One two three four five. Six seven eight nine ten! "),
+      col("id").cast("string")).as("text"))
+    val plan = graft.ops.Text.withC4Flags(docs, "text").queryExecution.optimizedPlan
+    assert(copies(plan) == (0, 1), plan)
   }
 
   test("the fenced chain returns the unfenced chain's rows") {

@@ -458,10 +458,10 @@ class StreamingSpec extends AnyFunSuite {
   // in-watermark.
   test("sustained dedup landing: perturbed copies grow state 10x") {
     val dir = "/root/testdata/sf0.001"
-    val inv = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly
-    val single = inv("stream_dedup_fingerprint")(spark, dir).count()
-    val sustained =
-      inv("stream_sustained_dedup_fingerprint")(spark, dir).count()
+    def rows(name: String): Long =
+      graft.queries.Queries.byName(name).plan(spark, dir).count()
+    val single = rows("stream_dedup_fingerprint")
+    val sustained = rows("stream_sustained_dedup_fingerprint")
     assert(sustained == 10 * single,
       s"state grew ${sustained}x vs single-copy $single — the " +
         "perturbation no longer keeps copies distinct (or dups leak " +
